@@ -253,8 +253,6 @@ class ImageFeaturizer:
             _zero_features,
             featurize_preloaded,
         )
-        from pic2vec_spark.model import model_weights
-
         # localCheckpoint(eager): every per-column join below references
         # this subtree — without materialization the decode+CNN pass
         # would re-run once PER image column (the same hazard
@@ -264,10 +262,7 @@ class ImageFeaturizer:
             .select("image_id", "missing", "features")
             .localCheckpoint(eager=True)
         )
-        zero_vec = _zero_features(
-            self.plan,
-            model_weights(self.plan.model, self.plan.weight_seed, self.plan.depth),
-        )
+        zero_vec = _zero_features(self.plan)
         zero_lit = F.array(*[F.lit(float(v)) for v in zero_vec]).cast(
             "array<float>"
         )

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pic2vec_spark.codecs import decode_image
-from pic2vec_spark.model import model_forward, model_weights
+from pic2vec_spark.model import model_forward, model_weights, weights_source
 from pic2vec_spark.plan import FeaturizerPlan
 from pic2vec_spark.preprocess import preprocess_pixels, resize_nearest
 
@@ -113,18 +113,32 @@ def featurize_batch(
 _worker_cache: dict = {}
 
 
-def _zero_features(plan: FeaturizerPlan, weights: dict[str, np.ndarray]) -> np.ndarray:
+def _zero_features(
+    plan: FeaturizerPlan,
+    source: str | None = None,
+    weights: dict[str, np.ndarray] | None = None,
+) -> np.ndarray:
     """f(zero tensor) — what the reference's model.predict returns for
-    missing rows' zero slices; computed once and reused."""
-    # keyed by the weights OBJECT (installed-blob vs seeded dicts differ
-    # under one plan); the entry holds a strong ref to the dict so its
-    # id() cannot be recycled onto a different weight set
-    key = ("zero", id(weights), plan.model, plan.depth, plan.num_features)
+    missing rows' zero slices; computed once per process per (weight
+    source, plan) and reused.
+
+    ``source`` is the ``weights_source`` tag ``weights`` were resolved
+    from (default: this process's resolution); ``weights`` are resolved
+    here when omitted, and only on a cache miss.  The entry keeps the
+    vector alone: keying by weight source rather than by the weights
+    object means a fresh weights dict per call (or per broadcast) hits
+    the same entry instead of pinning another weight set, while an
+    installed npz blob and the seeded stand-ins never share one."""
+    if source is None:
+        source = weights_source(plan.model, plan.depth)
+    key = ("zero", source, plan)
     if key not in _worker_cache:
+        if weights is None:
+            weights = model_weights(plan.model, plan.weight_seed, plan.depth)
         h, w = plan.target_size
         zeros = np.zeros((1, h, w, 3), dtype=np.float32)
-        _worker_cache[key] = (weights, forward_features(zeros, plan, weights)[0])
-    return _worker_cache[key][1]
+        _worker_cache[key] = forward_features(zeros, plan, weights)[0]
+    return _worker_cache[key]
 
 
 def _weights_ref(sc, plan: FeaturizerPlan, broadcast_weights: bool):
@@ -137,8 +151,6 @@ def _weights_ref(sc, plan: FeaturizerPlan, broadcast_weights: bool):
     off local mode, and a silent driver/executor split would featurize
     present rows with one weight set and zero-vector/oracle paths with
     another."""
-    from pic2vec_spark.model import weights_source
-
     if broadcast_weights:
         return sc.broadcast(model_weights(plan.model, plan.weight_seed, plan.depth))
     return ("expect", weights_source(plan.model, plan.depth))
@@ -151,8 +163,6 @@ def _get_weights(plan: FeaturizerPlan, weights_bc) -> dict[str, np.ndarray]:
         weights_bc = None
     if weights_bc is not None:
         return weights_bc.value
-    from pic2vec_spark.model import weights_source
-
     actual = weights_source(plan.model, plan.depth)
     if expected is not None and actual != expected:
         raise RuntimeError(
@@ -170,6 +180,15 @@ def _get_weights(plan: FeaturizerPlan, weights_bc) -> dict[str, np.ndarray]:
     return _worker_cache[key]
 
 
+def _ref_source(plan: FeaturizerPlan, weights_ref) -> str:
+    """The ``weights_source`` tag a ``_weights_ref`` handle stands for,
+    read on the driver (a Broadcast holds what this process resolved;
+    the no-broadcast tag names it) — the key workers cache f(0) under."""
+    if isinstance(weights_ref, tuple):
+        return weights_ref[1]
+    return weights_source(plan.model, plan.depth)
+
+
 # ------------------------------------------------------------------ pipeline
 
 _FEATS_SCHEMA = f"{_DIGEST} string, missing boolean, features array<float>"
@@ -180,12 +199,13 @@ def _featurize_udf(plan: FeaturizerPlan, weights_bc, metrics=None):
     (__digest, bytes, fmt) batches -> (__digest, missing, features).
     ``metrics`` (pic2vec_spark.metrics.FeaturizeMetrics) accumulates
     per-stage worker seconds back to the driver."""
+    source = _ref_source(plan, weights_bc)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import time as _t
 
         weights = _get_weights(plan, weights_bc)
-        zero_feat = _zero_features(plan, weights)
+        zero_feat = _zero_features(plan, source, weights)
         for pdf in batches:
             t0 = _t.time()
             feats, missing = featurize_batch(
@@ -274,9 +294,11 @@ def featurize_images(
             ]
         )
 
+        source = _ref_source(plan, weights_bc)
+
         def run_inline(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             weights = _get_weights(plan, weights_bc)
-            zero_feat = _zero_features(plan, weights)
+            zero_feat = _zero_features(plan, source, weights)
             for pdf in batches:
                 feats_arr, missing = featurize_batch(
                     list(pdf["bytes"]), list(pdf["fmt"]), plan, weights, zero_feat
@@ -549,7 +571,7 @@ def featurize_multi_column(
         .select(key, "missing", "features")
         .localCheckpoint(eager=True)
     )
-    zero_vec = _zero_features(plan, model_weights(plan.model, plan.weight_seed, plan.depth))
+    zero_vec = _zero_features(plan)
     zero_lit = F.array(*[F.lit(float(v)) for v in zero_vec]).cast("array<float>")
     out = df
     for c in image_cols:

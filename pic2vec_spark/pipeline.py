@@ -7,16 +7,25 @@ keyed, zero-leakage replacement for the reference's positional
 ``featurize → pd.concat(axis=1)`` flow
 (/root/reference/pic2vec/image_featurizer.py:362-482).
 
-Plan shape (and why it scales):
+Plan shape (late materialization — keys first, vectors last):
 
-    images ──▶ featurize_images (digest-dedup → CNN UDF → join back)
-    timeline(feature rows) ⟕ features     [equi-join on image_id;
-                                           AQE broadcasts the feature
-                                           side when small]
-    asof_join(timeline(query rows), ·)    [one entity-hash shuffle]
+    asof_join(timeline(query rows),
+              timeline(feature rows: entity, ts, row_id, image_id))
+                                          [one entity-hash shuffle of
+                                           narrow key rows, or a
+                                           broadcast of the keys]
+    matched ⟕ features on image_id_asof  [features = featurize_images
+                                           (digest-dedup → CNN UDF →
+                                           join back), one row per
+                                           image_id; AQE broadcasts
+                                           it when small]
 
 The CNN touches each distinct image content exactly once; the as-of
-join shuffles only (entity, ts, features) rows — never image bytes.
+join moves only (entity, ts, row_id, image_id) rows — never image bytes
+and never feature vectors — and a vector is attached to a query row only
+after that row has found its image.  The broadcast strategy collects
+timeline keys alone, so building the DataFrame runs no CNN: it runs
+inside the action.
 """
 
 from __future__ import annotations
@@ -24,14 +33,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pic2vec_spark.featurize import featurize_images
+from pic2vec_spark.featurize import _zero_features, featurize_images
 from pic2vec_spark.ops.asof import asof_join, asof_join_broadcast
 from pic2vec_spark.plan import FeaturizerPlan
 
-# auto-switch bound for the broadcast as-of path: rows x (feature vector
-# ~1 KB + per-entity numpy overhead) must fit comfortably in the driver
-# and every executor — 50k rows ~ 50-100 MB, the same judgement call as
-# spark.sql.autoBroadcastJoinThreshold scaled for wide feature payloads
+# auto-switch bound for the broadcast as-of path, in timeline feature
+# rows.  The broadcast carries keys only (entity, ts, row_id, image_id:
+# ~100 B/row with per-entity numpy overhead), so 50k rows (~5 MB) is
+# conservative for driver and executor memory; raising it moves larger
+# timelines from the shuffle strategy to the broadcast one
 BROADCAST_ASOF_MAX_ROWS = 50_000
 
 
@@ -47,60 +57,71 @@ def point_in_time_features(
     """images: (image_id, bytes, fmt, caption, ...);
     timeline: (entity_id, ts, image_id nullable, kind ∈ feature|query,
     row_id tiebreak).  Returns one row per query-kind timeline row with
-    ``image_id_asof / caption_asof / missing_asof / features_asof``.
+    ``ts_asof / image_id_asof / caption_asof / missing_asof /
+    features_asof``.
+
+    The as-of match picks ONE observation (latest ``ts``, then largest
+    ``row_id``); caption, missing flag and vector all belong to that
+    observation's image — a null caption stays null rather than
+    inheriting an older image's.  A matched ``image_id`` absent from
+    ``images`` gets the engine's unmatched-ref semantics
+    (``missing=True`` + the f(0) zero vector, same as
+    ``featurize_multi_column``); a query with no observation (or none
+    within ``tolerance_s``) gets nulls.  An ``image_id`` repeated in
+    ``images`` still yields one row per query (one of its rows is kept,
+    deterministically).
 
     ``asof_strategy``: ``"shuffle"`` = windowed ``asof_join`` (one
-    entity exchange of BOTH sides); ``"broadcast"`` = collect+broadcast
-    the feature side, zero shuffle of the query side (the scale path
-    when features are dimension-sized and queries are the fact side);
-    ``"auto"`` counts the timeline's feature rows (a cheap scan — no CNN
-    runs) and broadcasts when they fit ``broadcast_max_rows``.
+    entity exchange of BOTH sides' key rows); ``"broadcast"`` =
+    collect+broadcast the observation keys, zero shuffle of the query
+    side (the scale path when observations are dimension-sized and
+    queries are the fact side); ``"auto"`` counts the timeline's feature
+    rows and broadcasts when they fit ``broadcast_max_rows``.
     """
-    plan = plan or FeaturizerPlan.build()
-    feats = featurize_images(images, plan, metrics=metrics).select(
-        "image_id", "caption", "missing", "features"
-    )
-    # LEFT join: a timeline observation referencing an image_id absent
-    # from the images table is still an observation — it gets the
-    # engine's unmatched-ref semantics (missing=True + the f(0) zero
-    # vector, same as featurize_multi_column), instead of being dropped
-    # (which would silently substitute an older image at as-of time).
-    from pic2vec_spark.featurize import _zero_features
-    from pic2vec_spark.model import model_weights
-
-    zero_vec = _zero_features(
-        plan, model_weights(plan.model, plan.weight_seed, plan.depth)
-    )
-    zero_lit = F.array(*[F.lit(float(v)) for v in zero_vec]).cast("array<float>")
-    observations = (
-        timeline.filter((F.col("kind") == "feature") & F.col("image_id").isNotNull())
-        .select("entity_id", "ts", "row_id", "image_id")
-        .join(feats, "image_id", "left")
-        .withColumn("missing", F.coalesce(F.col("missing"), F.lit(True)))
-        .withColumn("features", F.coalesce(F.col("features"), zero_lit))
-    )
-    queries = timeline.filter(F.col("kind") == "query").select(
-        "entity_id", "ts", "row_id"
-    )
     if asof_strategy not in ("auto", "shuffle", "broadcast"):
         raise ValueError(
             f"asof_strategy must be auto|shuffle|broadcast, got {asof_strategy!r}"
         )
+    plan = plan or FeaturizerPlan.build()
+    observations = timeline.filter(
+        (F.col("kind") == "feature") & F.col("image_id").isNotNull()
+    ).select("entity_id", "ts", "row_id", "image_id")
+    queries = timeline.filter(F.col("kind") == "query").select(
+        "entity_id", "ts", "row_id"
+    )
     strategy = asof_strategy
     if strategy == "auto":
-        # count the timeline's feature rows, NOT `observations`: the
-        # former is a cheap parquet scan, the latter would run the CNN
-        n_obs = timeline.filter(
-            (F.col("kind") == "feature") & F.col("image_id").isNotNull()
-        ).count()
+        n_obs = observations.count()
         strategy = "broadcast" if n_obs <= broadcast_max_rows else "shuffle"
     join_fn = asof_join_broadcast if strategy == "broadcast" else asof_join
-    return join_fn(
+    matched = join_fn(
         queries,
         observations,
         on="entity_id",
         ts="ts",
-        value_cols=["image_id", "caption", "missing", "features"],
+        value_cols=["image_id"],
         tiebreak="row_id",
         tolerance_s=tolerance_s,
+    )
+
+    # one row per image_id, so a repeated id cannot fan a query out; the
+    # min over the struct keeps one images row's columns together and
+    # does not depend on partitioning
+    feats = (
+        featurize_images(images, plan, metrics=metrics)
+        .groupBy("image_id")
+        .agg(F.min(F.struct("caption", "missing", "features")).alias("f"))
+        .select(F.col("image_id").alias("image_id_asof"), "f.*")
+    )
+    zero_lit = F.array(*[F.lit(float(v)) for v in _zero_features(plan)]).cast(
+        "array<float>"
+    )
+    hit = F.col("image_id_asof").isNotNull()
+    return matched.join(feats, "image_id_asof", "left").select(
+        *queries.columns,
+        "ts_asof",
+        "image_id_asof",
+        F.col("caption").alias("caption_asof"),
+        F.when(hit, F.coalesce(F.col("missing"), F.lit(True))).alias("missing_asof"),
+        F.when(hit, F.coalesce(F.col("features"), zero_lit)).alias("features_asof"),
     )

@@ -160,3 +160,142 @@ def test_flagship_broadcast_strategy_equivalent_and_shuffle_free(spark, data, pl
         .set_index("row_id").sort_index()
     )
     assert c["image_id_asof"].fillna("-").tolist() == a["image_id_asof"].fillna("-").tolist()
+
+
+def _value_fixture():
+    """Entity 1 observes a captioned image, then one with a null
+    caption; entity 2's image is listed twice in ``images``; entity 3
+    references an id absent from ``images``; entity 4 observes nothing.
+    Returns (images, timeline, {query row_id: expected image_id_asof})."""
+    images = synth_images_pdf(3, seed=7)
+    images.loc[1, "caption"] = None
+    images = pd.concat([images, images.iloc[[2]]], ignore_index=True)
+    a, b, c = images.image_id[:3]
+    t0 = pd.Timestamp("2024-01-01")
+
+    def at(s):
+        return t0 + pd.Timedelta(seconds=s)
+
+    timeline = pd.DataFrame(
+        [
+            (1, at(10), a, "feature", 1),
+            (1, at(20), b, "feature", 2),
+            (1, at(30), None, "query", 3),
+            (1, at(0), None, "query", 4),
+            (1, at(15), None, "query", 10),
+            (2, at(10), c, "feature", 5),
+            (2, at(20), None, "query", 6),
+            (3, at(10), "img_ghost", "feature", 7),
+            (3, at(20), None, "query", 8),
+            (4, at(20), None, "query", 9),
+        ],
+        columns=["entity_id", "ts", "image_id", "kind", "row_id"],
+    )
+    expected = {3: b, 4: None, 10: a, 6: c, 8: "img_ghost", 9: None}
+    return images, timeline, expected
+
+
+@pytest.mark.parametrize("strategy", ["shuffle", "broadcast"])
+def test_value_columns_belong_to_matched_image(spark, plan, strategy):
+    """caption / missing / features come from the ONE matched
+    observation (a null caption is not back-filled from an older
+    image), and a repeated image_id in ``images`` still yields exactly
+    one row per query."""
+    from pic2vec_spark.featurize import _zero_features
+
+    images, timeline, expected = _value_fixture()
+    got = point_in_time_features(
+        spark.createDataFrame(images, schema=IMAGES_SCHEMA),
+        spark.createDataFrame(timeline, schema=TIMELINE_SCHEMA),
+        plan,
+        asof_strategy=strategy,
+    ).toPandas()
+    assert sorted(got.row_id) == sorted(expected)
+    feats = oracle_featurize(images.drop_duplicates("image_id"), plan).set_index("image_id")
+    captions = images.drop_duplicates("image_id").set_index("image_id").caption
+    for _, g in got.iterrows():
+        img = expected[g.row_id]
+        assert g.image_id_asof == img, g.row_id
+        if img is None:
+            assert g.caption_asof is None and g.missing_asof is None
+            assert g.features_asof is None
+        elif img in feats.index:
+            assert g.caption_asof == captions[img], g.row_id
+            assert bool(g.missing_asof) == bool(feats.missing[img])
+            assert np.allclose(np.asarray(g.features_asof, np.float32), feats.features[img], atol=1e-5)
+        else:  # unmatched reference
+            assert g.caption_asof is None and bool(g.missing_asof)
+            assert np.allclose(np.asarray(g.features_asof, np.float32), _zero_features(plan), atol=1e-5)
+
+
+def _window_outputs(node) -> list[list[tuple[str, str]]]:
+    """(name, type) of each output column of every Window node in a JVM
+    plan tree."""
+    found = []
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if n.nodeName() == "Window":
+            out = n.output()
+            found.append([
+                (out.apply(i).name(), out.apply(i).dataType().typeName())
+                for i in range(out.size())
+            ])
+        kids = n.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_vectors_attach_after_the_asof(spark, data, plan):
+    """Late materialization: the shuffle strategy's as-of window carries
+    no feature vector, and the broadcast strategy runs no CNN until the
+    action (its driver collect reads timeline keys only)."""
+    from pic2vec_spark.metrics import FeaturizeMetrics
+
+    images, timeline = data
+    img_df = spark.createDataFrame(images, schema=IMAGES_SCHEMA)
+    tl_df = spark.createDataFrame(timeline, schema=TIMELINE_SCHEMA)
+
+    out = point_in_time_features(img_df, tl_df, plan, asof_strategy="shuffle")
+    windows = _window_outputs(out._jdf.queryExecution().optimizedPlan())
+    assert windows, "the shuffle as-of should plan a Window"
+    # the optimizer renames window inputs (_w0, ...), so look for the
+    # vector by type as well as by name
+    assert not any(
+        name.startswith("features") or kind == "array"
+        for cols in windows
+        for name, kind in cols
+    ), windows
+
+    fm = FeaturizeMetrics(spark)
+    out = point_in_time_features(img_df, tl_df, plan, metrics=fm, asof_strategy="broadcast")
+    assert fm.summary().get("images", 0) == 0
+    out.write.format("noop").mode("overwrite").save()
+    assert fm.summary()["images"] > 0
+
+
+def test_zero_vector_cache_one_entry_per_weight_source(spark, data, plan, tmp_path, monkeypatch):
+    """Repeated calls reuse one f(0) entry and pin no weights dict; an
+    installed npz blob is another weight set and gets its own entry."""
+    import pic2vec_spark.featurize as fz
+    from pic2vec_spark.model import save_weights_npz, squeezenet_weights
+
+    monkeypatch.delenv("PIC2VEC_SPARK_WEIGHTS_DIR", raising=False)
+    monkeypatch.setattr(fz, "_worker_cache", {})
+    images, timeline = data
+    img_df = spark.createDataFrame(images, schema=IMAGES_SCHEMA)
+    tl_df = spark.createDataFrame(timeline, schema=TIMELINE_SCHEMA)
+    for _ in range(2):
+        point_in_time_features(img_df, tl_df, plan, asof_strategy="shuffle")
+    assert list(fz._worker_cache) == [("zero", "seeded", plan)]
+    assert not any(isinstance(v, dict) for v in fz._worker_cache.values())
+
+    # seeded biases are zero, so f(0) is too; a unit conv1 bias makes the
+    # blob's f(0) differ
+    blob_weights = dict(squeezenet_weights(seed=99))
+    blob_weights["conv1/bias"] = np.ones_like(blob_weights["conv1/bias"])
+    save_weights_npz(blob_weights, str(tmp_path / "squeezenet.npz"))
+    monkeypatch.setenv("PIC2VEC_SPARK_WEIGHTS_DIR", str(tmp_path))
+    blob = fz._zero_features(plan)
+    assert len(fz._worker_cache) == 2
+    assert not np.allclose(blob, fz._worker_cache[("zero", "seeded", plan)])
