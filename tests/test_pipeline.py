@@ -129,7 +129,10 @@ def test_flagship_broadcast_strategy_equivalent_and_shuffle_free(spark, data, pl
         )
     a, b = outs["shuffle"], outs["broadcast"]
     assert a["image_id_asof"].fillna("-").tolist() == b["image_id_asof"].fillna("-").tolist()
-    assert a["missing_asof"].fillna(False).tolist() == b["missing_asof"].fillna(False).tolist()
+    assert (
+        a["missing_asof"].astype("boolean").fillna(False).tolist()
+        == b["missing_asof"].astype("boolean").fillna(False).tolist()
+    )
     for x, y in zip(a["features_asof"], b["features_asof"]):
         if x is None or (isinstance(x, float) and pd.isna(x)):
             assert y is None or (isinstance(y, float) and pd.isna(y))
