@@ -198,7 +198,9 @@ def _featurize_udf(plan: FeaturizerPlan, weights_bc, metrics=None):
     """The core Arrow-batched decode+preprocess+CNN UDF over
     (__digest, bytes, fmt) batches -> (__digest, missing, features).
     ``metrics`` (pic2vec_spark.metrics.FeaturizeMetrics) accumulates
-    per-stage worker seconds back to the driver."""
+    per-stage worker seconds back to the driver: ``cnn_sec`` wall and
+    ``cpu_sec`` process CPU of ``featurize_batch``, so worker CPU minus
+    ``cpu_sec`` is the engine<->Python boundary."""
     source = _ref_source(plan, weights_bc)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -207,7 +209,7 @@ def _featurize_udf(plan: FeaturizerPlan, weights_bc, metrics=None):
         weights = _get_weights(plan, weights_bc)
         zero_feat = _zero_features(plan, source, weights)
         for pdf in batches:
-            t0 = _t.time()
+            t0, c0 = _t.time(), _t.process_time()
             feats, missing = featurize_batch(
                 list(pdf["bytes"]), list(pdf["fmt"]), plan, weights, zero_feat
             )
@@ -216,6 +218,7 @@ def _featurize_udf(plan: FeaturizerPlan, weights_bc, metrics=None):
                     images=float(len(pdf)),
                     missing=float(missing.sum()),
                     cnn_sec=_t.time() - t0,
+                    cpu_sec=_t.process_time() - c0,
                     batches=1.0,
                 )
             yield pd.DataFrame(

@@ -3,7 +3,8 @@ Arrow UDF workers (north rule: lineage rows + metrics).
 
 Spark accumulators flow from Python workers back to the driver with
 task completion, so the featurize stage can report decode/CNN seconds
-and image counts without any extra action or shuffle.  Snapshot commits
+(``cnn_sec`` wall, ``cpu_sec`` process CPU) and image counts without
+any extra action or shuffle.  Snapshot commits
 already record per-partition rows/digest/bytes/write_sec (lineage);
 these accumulators cover the compute stages in between.
 """

@@ -72,6 +72,7 @@ def test_featurize_metrics_accumulate(spark, plan):
     out.write.format("noop").mode("overwrite").save()
     s = m.summary()
     assert s["images"] > 0 and s["cnn_sec"] > 0 and s["batches"] >= 1
+    assert s["cpu_sec"] > 0
     assert "cnn_images_per_worker_sec" in s
 
 
