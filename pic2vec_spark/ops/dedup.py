@@ -463,15 +463,10 @@ def lsh_candidate_pairs(
     Scale path: never materializes all pairs — shuffle keys are
     (band_idx, band_signature) buckets, then pairs only within buckets.
     """
-    buckets = lsh_band_buckets(df, id_col, text_col, n_hashes, bands, shingle_n)
-    a = buckets.select(F.col(id_col).alias("id1"), "band", "band_sig")
-    b2 = buckets.select(F.col(id_col).alias("id2"), "band", "band_sig")
-    return (
-        a.join(b2, ["band", "band_sig"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
+    from pic2vec_spark.ops.dedup_store import _lsh_index, _pairs
+
+    spec = _lsh_index(n_hashes, bands, shingle_n, 1)
+    return _pairs(spec, spec.rows(df, id_col, text_col), id_col)
 
 
 # --------------------------------------------------------------- simhash
@@ -522,55 +517,12 @@ def hamming_neardup_pairs(
     max_distance+1 chunks — any pair within distance d shares at least
     one exact chunk (pigeonhole), so candidates come from chunk-equality
     buckets, then exact popcount filters."""
-    chunks = max_distance + 1
-    width = bits // chunks
+    from pic2vec_spark.ops.dedup_store import _hamming_index, _pairs
 
-    def chunk_val(c: int):
-        # the last chunk absorbs the remainder bits so all `bits` are covered
-        w = width if c < chunks - 1 else bits - width * (chunks - 1)
-        return F.shiftright(F.col(sig_col), c * width).bitwiseAND(
-            F.lit((1 << w) - 1)
-        )
-
-    # all chunks in one projection + explode — a per-chunk UNION would
-    # re-run the upstream signature computation once per chunk.  The
-    # signature is aliased (not renamed): no collision when the input
-    # already carries a column named 'simhash'.
-    entries = F.array(
-        *[
-            F.struct(F.lit(c).alias("chunk"), chunk_val(c).alias("chunk_val"))
-            for c in range(chunks)
-        ]
-    )
-    buckets = sim.select(
-        F.col(id_col),
-        F.col(sig_col).alias("simhash"),
-        F.explode(entries).alias("__cb"),
-    ).select(
-        id_col,
-        "simhash",
-        F.col("__cb.chunk").alias("chunk"),
-        F.col("__cb.chunk_val").alias("chunk_val"),
-    )
-    a = buckets.select(
-        F.col(id_col).alias("id1"), F.col("simhash").alias("s1"), "chunk", "chunk_val"
-    )
-    b = buckets.select(
-        F.col(id_col).alias("id2"), F.col("simhash").alias("s2"), "chunk", "chunk_val"
-    )
-    pairs = (
-        a.join(b, ["chunk", "chunk_val"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", "s1", "s2")
-        .distinct()
-    )
-    return (
-        pairs.withColumn(
-            "hamming", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2")))
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .select("id1", "id2", "hamming")
-    )
+    # the persisted Hamming index's chunk split and verify step, minus
+    # the file layout (bucket_mod only shapes the unused pruning key)
+    spec = _hamming_index(max_distance, bits, 1)
+    return _pairs(spec, spec.rows(sim, id_col, sig_col), id_col)
 
 
 def neardup_clusters(
@@ -709,8 +661,9 @@ def contrastive_triplets(
     Plan shape: the pool is a bounded TakeOrdered (the
     sample_vectors contract — at 10^12 rows swap in a uniform sample)
     broadcast into one narrow slot expansion (pairs × n_neg rows), a
-    broadcast pool join, and one broadcast cluster anti-condition —
-    no corpus-scaled shuffle beyond what produced the pairs."""
+    broadcast pool join, and two plain equi-joins against the cluster
+    table for the same-cluster screen (the table is corpus-sized, so
+    the planner — not a hint — picks broadcast vs shuffle)."""
     if n_neg < 1:
         raise ValueError(f"n_neg must be >= 1, got {n_neg}")
     if pool_size < n_neg + 2:
@@ -777,16 +730,8 @@ def contrastive_triplets(
             F.col(cluster_col).alias("__cc"),
         )
         out = (
-            out.join(
-                F.broadcast(a),
-                F.col("anchor").cast("string") == F.col("__ak"),
-                "left",
-            )
-            .join(
-                F.broadcast(c),
-                F.col("__cand").cast("string") == F.col("__ck"),
-                "left",
-            )
+            out.join(a, F.col("anchor").cast("string") == F.col("__ak"), "left")
+            .join(c, F.col("__cand").cast("string") == F.col("__ck"), "left")
             .filter(
                 F.col("__ac").isNull()
                 | F.col("__cc").isNull()

@@ -38,6 +38,13 @@ Build once, append only the new batch's digests, and
 are byte-identical (post-normalization) to something already committed"
 without rescanning a single committed byte.
 
+A third kind, the Hamming-ball index (``*_hamming_dedup_*``), does the
+same for <=64-bit fingerprints.  All kinds, and ``ops.ivf_store``'s
+cells, are instances of one private ``_KeyIndex`` spec (key rows,
+pruning key, identity properties + family digest, optional Hamming
+verify), so build, append, the family check, the probe and the pairs
+are each written once.
+
 Reference contrast: pic2vec keeps no state between runs (it re-reads
 its CSV/directory per call, image_featurizer.py:250); this module is
 part of the engine's 100 TB ingest layer, not a parity item.
@@ -46,6 +53,8 @@ part of the engine's 100 TB ingest layer, not a parity item.
 from __future__ import annotations
 
 import hashlib
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,38 +62,357 @@ from pyspark.sql import functions as F
 from pic2vec_spark.ops.dedup import _norm_text, _perm_constants, lsh_band_buckets
 from pic2vec_spark.snapshots import SnapshotTable
 
+# ------------------------------------------------------ the key index
 
-def _family_digest(
+
+@dataclass(frozen=True)
+class _KeyIndex:
+    """The spec every persisted key index is an instance of (LSH band
+    buckets, md5 digests, pigeonhole Hamming chunks, IVF cells):
+    ``rows(df, id_col, value_col)`` emits ``(id_col, *on, [sig],
+    key_col)``, ``key_col`` being the bounded integer partition /
+    per-file stats key probes prune on; ``family`` is the identity
+    recorded after ``index``/``id_col``, of which ``digest_key`` must
+    match on reuse; ``max_distance`` verifies candidate pairs by the
+    Hamming distance of their ``sig``."""
+
+    kind: str
+    family: dict
+    key_col: str
+    n_files: int
+    rows: Callable[[DataFrame, str, str], DataFrame]
+    on: tuple = ()
+    digest_key: str | None = None
+    mismatch: str = ""
+    max_distance: int | None = None
+    records_id: bool = True
+
+    def identity(self, id_col: str) -> dict:
+        ids = {"id_col": id_col} if self.records_id else {}
+        return {"index": self.kind, **ids, **self.family}
+
+
+def _hex_prefix(col: str, prefix_chars: int):
+    return F.conv(F.substring(col, 1, prefix_chars), 16, 10).cast("int")
+
+
+def _lsh_index(
     n_hashes: int, bands: int, shingle_n: int, prefix_chars: int
-) -> str:
-    """Digest of the full hash family: an index is only probeable /
-    appendable under the exact family it was built with (the MinHash
-    permutation constants are included, so even a seed change is
-    caught)."""
+) -> _KeyIndex:
+    """Band buckets ``(id, band, band_sig, sig_pfx)``; the family
+    digest covers the MinHash permutation constants, so even a seed
+    change is caught."""
     parts = [n_hashes, bands, shingle_n, prefix_chars, *(
         v for ab in _perm_constants(n_hashes) for v in ab
     )]
-    return hashlib.md5(",".join(map(str, parts)).encode()).hexdigest()
 
+    def rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+        return lsh_band_buckets(
+            df, id_col, text_col, n_hashes, bands, shingle_n
+        ).withColumn("sig_pfx", _hex_prefix("band_sig", prefix_chars))
 
-def _bucket_frame(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int,
-    bands: int,
-    shingle_n: int,
-    prefix_chars: int,
-) -> DataFrame:
-    """(id, band, band_sig, sig_pfx) — band buckets plus the integer
-    band_sig hex prefix used as the file-partition / pruning key."""
-    return lsh_band_buckets(
-        docs, id_col, text_col, n_hashes, bands, shingle_n
-    ).withColumn(
+    return _KeyIndex(
+        "lsh_dedup",
+        {
+            "n_hashes": int(n_hashes),
+            "bands": int(bands),
+            "shingle_n": int(shingle_n),
+            "prefix_chars": int(prefix_chars),
+            "family_digest": hashlib.md5(
+                ",".join(map(str, parts)).encode()
+            ).hexdigest(),
+        },
         "sig_pfx",
-        F.conv(F.substring("band_sig", 1, prefix_chars), 16, 10).cast("int"),
+        # 2x keys: same rule as ops.ivf_store — hash collisions then
+        # rarely co-locate two keys in one file, keeping per-file key
+        # ranges tight so probe pruning stays near-exact
+        2 * (16 ** prefix_chars),
+        rows,
+        on=("band", "band_sig"),
+        digest_key="family_digest",
+        mismatch=(
+            "this build's MinHash permutation constants do not "
+            "reproduce the family this index was built with "
+            "(family_digest mismatch) — signatures would be incomparable "
+            "and every cross-batch duplicate silently missed; rebuild the "
+            "index"
+        ),
     )
 
+
+def _digest_index(prefix_chars: int, norm: str) -> _KeyIndex:
+    """One md5 row per document ``(id, fp_md5, fp_pfx)``.  ``norm``
+    picks the digest definition: ``lower_trim`` matches
+    ``ops.dedup.exact_dedup`` (text corpora, so index answers equal
+    the one-shot operator's); ``binary`` hashes the raw column bytes
+    (image/audio blobs, where case-folding is meaningless)."""
+
+    def rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+        if norm == "lower_trim":
+            digest = F.md5(_norm_text(text_col))
+        elif norm == "binary":
+            digest = F.md5(F.col(text_col))
+        else:
+            raise ValueError(f"unknown digest norm {norm!r}")
+        return df.select(F.col(id_col), digest.alias("fp_md5")).withColumn(
+            "fp_pfx", _hex_prefix("fp_md5", prefix_chars)
+        )
+
+    return _KeyIndex(
+        "digest_dedup",
+        {"norm": f"{norm}_md5", "prefix_chars": int(prefix_chars)},
+        "fp_pfx",
+        2 * (16 ** prefix_chars),
+        rows,
+        on=("fp_md5",),
+    )
+
+
+def _hamming_index(max_distance: int, bits: int, bucket_mod: int) -> _KeyIndex:
+    """Pigeonhole chunk buckets ``(id, sig, chunk, chunk_val, pfx)``:
+    max_distance+1 chunks (the last absorbs the remainder bits), so any
+    pair within max_distance bits shares at least one exact chunk; the
+    bounded pruning key is pfx = chunk * bucket_mod + chunk_val %
+    bucket_mod."""
+    chunks = max_distance + 1
+    width = bits // chunks
+
+    def chunk_val(sig_col: str, c: int):
+        w = width if c < chunks - 1 else bits - width * (chunks - 1)
+        return F.shiftright(F.col(sig_col), c * width).bitwiseAND(
+            F.lit((1 << w) - 1)
+        )
+
+    def rows(df: DataFrame, id_col: str, sig_col: str) -> DataFrame:
+        # all chunks in one projection + explode — a per-chunk UNION
+        # would re-run the upstream signature computation once per chunk
+        entries = F.array(*[
+            F.struct(
+                F.lit(c).alias("chunk"), chunk_val(sig_col, c).alias("chunk_val")
+            )
+            for c in range(chunks)
+        ])
+        return df.select(
+            F.col(id_col),
+            F.col(sig_col).alias("sig"),
+            F.explode(entries).alias("__cb"),
+        ).select(
+            id_col,
+            "sig",
+            F.col("__cb.chunk").alias("chunk"),
+            F.col("__cb.chunk_val").alias("chunk_val"),
+            (
+                F.col("__cb.chunk") * bucket_mod
+                + F.pmod(F.col("__cb.chunk_val"), F.lit(bucket_mod))
+            ).cast("int").alias("pfx"),
+        )
+
+    return _KeyIndex(
+        "hamming_dedup",
+        {
+            "max_distance": int(max_distance),
+            "bits": int(bits),
+            "bucket_mod": int(bucket_mod),
+            "family_digest": hashlib.md5(
+                f"hamming,{max_distance},{bits},{bucket_mod}".encode()
+            ).hexdigest(),
+        },
+        "pfx",
+        2 * chunks * bucket_mod,
+        rows,
+        on=("chunk", "chunk_val"),
+        digest_key="family_digest",
+        mismatch=(
+            "this build's chunk family does not reproduce the "
+            "one this index was built with (family_digest mismatch) — "
+            "chunk buckets would be incomparable; rebuild the index"
+        ),
+        max_distance=int(max_distance),
+    )
+
+
+def _manifest_props(table_root: str, spark: SparkSession,
+                    missing: str) -> tuple:
+    table = SnapshotTable(table_root, spark)
+    man = table.manifest()
+    if man is None:
+        raise FileNotFoundError(missing)
+    return table, man.get("properties") or {}
+
+
+def _check_family(spec: _KeyIndex, props: dict, message: str) -> None:
+    # an index recorded without the digest predates it: accepted
+    if spec.digest_key is not None and props.get(spec.digest_key) not in (
+        None, spec.family[spec.digest_key]
+    ):
+        raise ValueError(message)
+
+
+def _open(table_root: str, spark: SparkSession, kind: str,
+          action: str | None = None) -> tuple:
+    """(table, props, spec) of an existing ``kind`` index, the spec
+    rebuilt from the manifest — the source of truth, so appends and
+    probes key new rows the same way forever.  With ``action`` the
+    family (digest indexes: the digest norm) is verified first."""
+    table, props = _manifest_props(
+        table_root, spark, f"no {kind} index at {table_root} — build it first"
+    )
+    if props.get("index") != kind:
+        raise ValueError(
+            f"snapshot table at {table_root} is not a {kind} index "
+            f"(index={props.get('index')!r})"
+        )
+    if kind == "lsh_dedup":
+        spec = _lsh_index(*(int(props[k]) for k in (
+            "n_hashes", "bands", "shingle_n", "prefix_chars")))
+    elif kind == "hamming_dedup":
+        spec = _hamming_index(*(int(props[k]) for k in (
+            "max_distance", "bits", "bucket_mod")))
+    else:
+        norm = props.get("norm", "lower_trim_md5")
+        if action is not None and norm not in ("lower_trim_md5", "binary_md5"):
+            raise ValueError(
+                f"{action}: index digest norm {norm!r} is not one this "
+                "build can reproduce — digests would be incomparable; "
+                "rebuild the index"
+            )
+        spec = _digest_index(int(props["prefix_chars"]), norm[: -len("_md5")])
+    if action is not None:
+        _check_family(spec, props, f"{action}: {spec.mismatch}")
+    return table, props, spec
+
+
+def _write(spec: _KeyIndex, table: SnapshotTable, df: DataFrame,
+           id_col: str, value_col: str, properties: dict | None,
+           append: bool) -> str:
+    return (table.append if append else table.write)(
+        spec.rows(df, id_col, value_col),
+        partition_by=spec.key_col,
+        num_partitions=spec.n_files,
+        stats_cols=[spec.key_col],
+        properties=properties,
+    )
+
+
+def _build(spec: _KeyIndex, df: DataFrame, table_root: str,
+           spark: SparkSession, id_col: str, value_col: str,
+           extra_properties: dict | None) -> str:
+    return _write(
+        spec, SnapshotTable(table_root, spark), df, id_col, value_col,
+        {**(extra_properties or {}), **spec.identity(id_col)}, False,
+    )
+
+
+def _append(spec: _KeyIndex, table: SnapshotTable, df: DataFrame,
+            id_col: str, value_col: str, properties: dict | None) -> str:
+    # a caller-supplied dict REPLACES the manifest properties wholesale
+    # (append only carries the parent's when properties is None) — merge
+    # the index-identity keys back on top, or the next append/probe
+    # would go unguarded
+    if properties is not None:
+        properties = {**properties, **spec.identity(id_col)}
+    return _write(spec, table, df, id_col, value_col, properties, True)
+
+
+def _append_checked(kind: str, new: DataFrame, table_root: str,
+                    spark: SparkSession, id_col: str, value_col: str,
+                    properties: dict | None) -> str:
+    table, props, spec = _open(table_root, spark, kind, "append")
+    if props.get("id_col") != id_col:
+        raise ValueError(
+            f"append id_col {id_col!r} != index id_col {props.get('id_col')!r}"
+        )
+    return _append(spec, table, new, id_col, value_col, properties)
+
+
+def _key_scan(table: SnapshotTable, key_col: str, keyed: DataFrame):
+    """The index scan file-pruned to ``keyed``'s distinct ``key_col``
+    values, or None when it has none.  The key set is bounded by the
+    key space (≤256 prefixes, chunks x bucket_mod, n_cells) — a
+    driver-sized collect that drives manifest pruning; the residual
+    in-range misses are dropped by the row filter (which lands in
+    PushedFilters too)."""
+    keys = sorted(r[0] for r in keyed.select(key_col).distinct().collect())
+    if not keys:
+        return None
+    return table.scan(
+        min_stats={key_col: (keys[0], keys[-1])}
+    ).filter(F.col(key_col).isin(*keys))
+
+
+def _side(spec: _KeyIndex, rows: DataFrame, id_col: str, tag: str):
+    """One side of a key join: (id{tag}, *on[, s{tag}])."""
+    sig = [] if spec.max_distance is None else [F.col("sig").alias(f"s{tag}")]
+    return rows.select(F.col(id_col).alias(f"id{tag}"), *spec.on, *sig)
+
+
+def _self_pairs(spec: _KeyIndex, rows: DataFrame, id_col: str) -> DataFrame:
+    """Key-sharing pairs (id1 < id2) within one key-row frame."""
+    return (
+        _side(spec, rows, id_col, "1")
+        .join(_side(spec, rows, id_col, "2"), list(spec.on))
+        .filter(F.col("id1") < F.col("id2"))
+        .drop(*spec.on)
+    )
+
+
+def _verified(spec: _KeyIndex, candidates: DataFrame) -> DataFrame:
+    """Distinct candidate pairs, Hamming-verified when the spec asks."""
+    pairs = candidates.distinct()
+    if spec.max_distance is None:
+        return pairs
+    return (
+        pairs.withColumn(
+            "hamming", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2")))
+        )
+        .filter(F.col("hamming") <= spec.max_distance)
+        .select("id1", "id2", "hamming")
+    )
+
+
+def _pairs(spec: _KeyIndex, rows: DataFrame, id_col: str) -> DataFrame:
+    return _verified(spec, _self_pairs(spec, rows, id_col))
+
+
+def _probe(table_root: str, spark: SparkSession, kind: str,
+           batch: DataFrame, id_col: str, value_col: str) -> tuple:
+    """(spec, delta, cross): the batch's key rows, checkpointed (used
+    for the key set, the corpus join and the within-batch join), and
+    the corpus-vs-batch key matches (ida, idb, *on[, sa, sb]) — the
+    pruned index scan joined with the broadcast batch, so the corpus
+    never shuffles — or None when the batch has no keys."""
+    table, props, spec = _open(table_root, spark, kind, "probe")
+    delta = spec.rows(batch, id_col, value_col).localCheckpoint(eager=True)
+    corpus = _key_scan(table, spec.key_col, delta)
+    if corpus is None:
+        return spec, delta, None
+    cross = _side(spec, corpus, props["id_col"], "a").join(
+        F.broadcast(_side(spec, delta, id_col, "b")), list(spec.on)
+    )
+    return spec, delta, cross
+
+
+def _probe_pairs(table_root: str, spark: SparkSession, kind: str,
+                 batch: DataFrame, id_col: str, value_col: str) -> DataFrame:
+    """Candidate pairs touching the batch: corpus-vs-batch ∪ within-batch."""
+    spec, delta, cross = _probe(
+        table_root, spark, kind, batch, id_col, value_col
+    )
+    within = _self_pairs(spec, delta, id_col)
+    if cross is None:
+        return _verified(spec, within)
+    sigs = [] if spec.max_distance is None else [
+        F.col("sa").alias("s1"), F.col("sb").alias("s2")
+    ]
+    cross = cross.filter(F.col("ida") != F.col("idb")).select(
+        F.least("ida", "idb").alias("id1"),
+        F.greatest("ida", "idb").alias("id2"),
+        *sigs,
+    )
+    return _verified(spec, cross.unionByName(within))
+
+
+# ------------------------------------------------------ MinHash-LSH index
 
 def build_lsh_dedup_index(
     docs: DataFrame,
@@ -102,67 +430,10 @@ def build_lsh_dedup_index(
     returns the snapshot id.  ``prefix_chars`` hex chars of band_sig
     (16**prefix_chars buckets) drive file layout and probe pruning —
     1 suits tests, 2 (256-way) a production table."""
-    buckets = _bucket_frame(
-        docs, id_col, text_col, n_hashes, bands, shingle_n, prefix_chars
+    return _build(
+        _lsh_index(n_hashes, bands, shingle_n, prefix_chars), docs,
+        table_root, spark, id_col, text_col, extra_properties,
     )
-    table = SnapshotTable(table_root, spark)
-    return table.write(
-        buckets,
-        partition_by="sig_pfx",
-        # 2x prefixes: same rule as ops.ivf_store — hash collisions then
-        # rarely co-locate two prefixes in one file, keeping per-file
-        # prefix ranges tight so probe pruning stays near-exact
-        num_partitions=2 * (16 ** prefix_chars),
-        stats_cols=["sig_pfx"],
-        properties={
-            **(extra_properties or {}),
-            "index": "lsh_dedup",
-            "id_col": id_col,
-            "n_hashes": int(n_hashes),
-            "bands": int(bands),
-            "shingle_n": int(shingle_n),
-            "prefix_chars": int(prefix_chars),
-            "family_digest": _family_digest(
-                n_hashes, bands, shingle_n, prefix_chars
-            ),
-        },
-    )
-
-
-def _index_family(
-    table_root: str, spark: SparkSession, kind: str = "lsh_dedup"
-) -> tuple:
-    """(table, properties) with the family fields validated present."""
-    table = SnapshotTable(table_root, spark)
-    man = table.manifest()
-    if man is None:
-        raise FileNotFoundError(
-            f"no {kind} index at {table_root} — build it first"
-        )
-    props = man.get("properties") or {}
-    if props.get("index") != kind:
-        raise ValueError(
-            f"snapshot table at {table_root} is not a {kind} index "
-            f"(index={props.get('index')!r})"
-        )
-    return table, props
-
-
-def _check_family(props: dict, action: str) -> tuple[int, int, int, int]:
-    n_hashes = int(props["n_hashes"])
-    bands = int(props["bands"])
-    shingle_n = int(props["shingle_n"])
-    prefix_chars = int(props["prefix_chars"])
-    expect = _family_digest(n_hashes, bands, shingle_n, prefix_chars)
-    if props.get("family_digest") not in (None, expect):
-        raise ValueError(
-            f"{action}: this build's MinHash permutation constants do not "
-            "reproduce the family this index was built with "
-            "(family_digest mismatch) — signatures would be incomparable "
-            "and every cross-batch duplicate silently missed; rebuild the "
-            "index"
-        )
-    return n_hashes, bands, shingle_n, prefix_chars
 
 
 def append_to_lsh_dedup_index(
@@ -178,32 +449,8 @@ def append_to_lsh_dedup_index(
     new prefix-partitioned files.  Existing files are carried forward
     untouched — ingest cost ∝ new data.  Returns the new snapshot id
     (the parent stays readable: time travel across index versions)."""
-    table, props = _index_family(table_root, spark)
-    n_hashes, bands, shingle_n, prefix_chars = _check_family(props, "append")
-    if props.get("id_col") != id_col:
-        raise ValueError(
-            f"append id_col {id_col!r} != index id_col {props.get('id_col')!r}"
-        )
-    buckets = _bucket_frame(
-        new_docs, id_col, text_col, n_hashes, bands, shingle_n, prefix_chars
-    )
-    # same merge rule as ops.ivf_store.append_to_ivf_index: caller
-    # properties must not displace the index-identity keys, or the next
-    # append/probe would go unguarded
-    if properties is not None:
-        properties = {
-            **properties,
-            **{k: props[k] for k in (
-                "index", "id_col", "n_hashes", "bands", "shingle_n",
-                "prefix_chars", "family_digest",
-            ) if k in props},
-        }
-    return table.append(
-        buckets,
-        partition_by="sig_pfx",
-        num_partitions=2 * (16 ** prefix_chars),
-        stats_cols=["sig_pfx"],
-        properties=properties,
+    return _append_checked(
+        "lsh_dedup", new_docs, table_root, spark, id_col, text_col, properties
     )
 
 
@@ -214,17 +461,8 @@ def neardup_pairs_from_index(
     — equals ``lsh_candidate_pairs`` over every indexed document (the
     bucket definition is shared code), but reads only the bucket files:
     no text, no shingling, no MinHash recompute."""
-    table, props = _index_family(table_root, spark)
-    id_col = props.get("id_col", "doc_id")
-    buckets = table.scan().select(id_col, "band", "band_sig")
-    a = buckets.select(F.col(id_col).alias("id1"), "band", "band_sig")
-    b = buckets.select(F.col(id_col).alias("id2"), "band", "band_sig")
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
+    table, props, spec = _open(table_root, spark, "lsh_dedup")
+    return _pairs(spec, table.scan(), props["id_col"])
 
 
 def probe_lsh_dedup_index(
@@ -242,73 +480,12 @@ def probe_lsh_dedup_index(
     duplicates can be dropped from the batch; equals the full
     ``lsh_candidate_pairs`` over (corpus ∪ batch) restricted to pairs
     touching the batch."""
-    table, props = _index_family(table_root, spark)
-    n_hashes, bands, shingle_n, prefix_chars = _check_family(props, "probe")
-    idx_id = props.get("id_col", "doc_id")
-    delta = _bucket_frame(
-        new_docs, id_col, text_col, n_hashes, bands, shingle_n, prefix_chars
-    ).localCheckpoint(eager=True)  # used 3x: prefix set, corpus join, self-join
-    # the distinct prefix set is bounded by 16**prefix_chars (≤256) —
-    # a driver-sized collect that drives manifest file pruning, the
-    # same shape as probe_ivf_index's probed-cell set
-    pfx = sorted(
-        r["sig_pfx"] for r in delta.select("sig_pfx").distinct().collect()
+    return _probe_pairs(
+        table_root, spark, "lsh_dedup", new_docs, id_col, text_col
     )
-    if not pfx:
-        return delta.select(
-            F.col(id_col).alias("id1"), F.col(id_col).alias("id2")
-        ).limit(0)
-    corpus = table.scan(
-        min_stats={"sig_pfx": (pfx[0], pfx[-1])}
-    ).filter(F.col("sig_pfx").isin(*pfx))
-    cross = (
-        corpus.select(F.col(idx_id).alias("ia"), "band", "band_sig")
-        .join(
-            F.broadcast(
-                delta.select(F.col(id_col).alias("ib"), "band", "band_sig")
-            ),
-            ["band", "band_sig"],
-        )
-        .filter(F.col("ia") != F.col("ib"))
-        .select(
-            F.least("ia", "ib").alias("id1"),
-            F.greatest("ia", "ib").alias("id2"),
-        )
-    )
-    da = delta.select(F.col(id_col).alias("id1"), "band", "band_sig")
-    db = delta.select(F.col(id_col).alias("id2"), "band", "band_sig")
-    within = (
-        da.join(db, ["band", "band_sig"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-    )
-    return cross.unionByName(within).distinct()
 
 
 # --------------------------------------------------- exact digest index
-
-def _digest_frame(
-    docs: DataFrame, id_col: str, text_col: str, prefix_chars: int,
-    norm: str = "lower_trim",
-) -> DataFrame:
-    """(id, fp_md5, fp_pfx) — one md5 row per document.  ``norm``
-    picks the digest definition: ``lower_trim`` matches
-    ``ops.dedup.exact_dedup`` (text corpora, so index answers equal
-    the one-shot operator's); ``binary`` hashes the raw column bytes
-    (image/audio blobs, where case-folding is meaningless)."""
-    if norm == "lower_trim":
-        digest = F.md5(_norm_text(text_col))
-    elif norm == "binary":
-        digest = F.md5(F.col(text_col))
-    else:
-        raise ValueError(f"unknown digest norm {norm!r}")
-    return docs.select(
-        F.col(id_col), digest.alias("fp_md5")
-    ).withColumn(
-        "fp_pfx",
-        F.conv(F.substring("fp_md5", 1, prefix_chars), 16, 10).cast("int"),
-    )
-
 
 def build_digest_dedup_index(
     docs: DataFrame,
@@ -325,34 +502,10 @@ def build_digest_dedup_index(
     ``build_lsh_dedup_index``.  ``norm='binary'`` makes this an exact
     image/blob index (digest over raw bytes).  Returns the snapshot
     id."""
-    table = SnapshotTable(table_root, spark)
-    return table.write(
-        _digest_frame(docs, id_col, text_col, prefix_chars, norm),
-        partition_by="fp_pfx",
-        num_partitions=2 * (16 ** prefix_chars),
-        stats_cols=["fp_pfx"],
-        properties={
-            **(extra_properties or {}),
-            "index": "digest_dedup",
-            "id_col": id_col,
-            "norm": f"{norm}_md5",
-            "prefix_chars": int(prefix_chars),
-        },
+    return _build(
+        _digest_index(prefix_chars, norm), docs, table_root, spark,
+        id_col, text_col, extra_properties,
     )
-
-
-def _digest_norm(props: dict, action: str) -> str:
-    """The digest definition this index was built with — the manifest
-    is the source of truth, so appends and probes digest new rows the
-    same way forever (mixed-norm digests would be incomparable)."""
-    norm_prop = props.get("norm", "lower_trim_md5")
-    if norm_prop not in ("lower_trim_md5", "binary_md5"):
-        raise ValueError(
-            f"{action}: index digest norm {norm_prop!r} is not one this "
-            "build can reproduce — digests would be incomparable; "
-            "rebuild the index"
-        )
-    return norm_prop[: -len("_md5")]
 
 
 def append_to_digest_dedup_index(
@@ -366,26 +519,9 @@ def append_to_digest_dedup_index(
     """Digest ONLY the new documents and append them as new
     prefix-partitioned files; committed files are carried forward
     untouched — ingest cost ∝ new data.  Returns the new snapshot id."""
-    table, props = _index_family(table_root, spark, "digest_dedup")
-    if props.get("id_col") != id_col:
-        raise ValueError(
-            f"append id_col {id_col!r} != index id_col {props.get('id_col')!r}"
-        )
-    norm = _digest_norm(props, "append")
-    prefix_chars = int(props["prefix_chars"])
-    if properties is not None:
-        properties = {
-            **properties,
-            **{k: props[k] for k in (
-                "index", "id_col", "norm", "prefix_chars",
-            ) if k in props},
-        }
-    return table.append(
-        _digest_frame(new_docs, id_col, text_col, prefix_chars, norm),
-        partition_by="fp_pfx",
-        num_partitions=2 * (16 ** prefix_chars),
-        stats_cols=["fp_pfx"],
-        properties=properties,
+    return _append_checked(
+        "digest_dedup", new_docs, table_root, spark, id_col, text_col,
+        properties,
     )
 
 
@@ -395,13 +531,12 @@ def duplicate_groups_from_index(
     """(fp_md5, keep_id, n_dups) over every indexed document — equals
     ``ops.dedup.exact_dedup`` on the same documents (shared digest
     definition), but reads only the digest files: no text scan."""
-    table, props = _index_family(table_root, spark, "digest_dedup")
-    id_col = props.get("id_col", "doc_id")
+    table, props, _ = _open(table_root, spark, "digest_dedup")
     return (
         table.scan()
         .groupBy("fp_md5")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min(props["id_col"]).alias("keep_id"),
             F.count(F.lit(1)).alias("n_dups"),
         )
     )
@@ -422,85 +557,19 @@ def probe_digest_dedup_index(
     pruned files, and the corpus side never shuffles.  Run BEFORE
     ``append_to_digest_dedup_index`` so exact duplicates can be dropped
     from (or linked in) the incoming batch."""
-    table, props = _index_family(table_root, spark, "digest_dedup")
-    idx_id = props.get("id_col", "doc_id")
-    prefix_chars = int(props["prefix_chars"])
-    delta = _digest_frame(
-        new_docs, id_col, text_col, prefix_chars,
-        _digest_norm(props, "probe"),
-    ).localCheckpoint(eager=True)  # used 2x: prefix set + corpus join
-    # bounded by 16**prefix_chars (≤256) — driver-sized, drives pruning
-    pfx = sorted(
-        r["fp_pfx"] for r in delta.select("fp_pfx").distinct().collect()
+    _, delta, cross = _probe(
+        table_root, spark, "digest_dedup", new_docs, id_col, text_col
     )
-    if not pfx:
+    if cross is None:
         return delta.select(
             F.col(id_col), F.col(id_col).alias("keep_id")
         ).limit(0)
-    corpus = table.scan(
-        min_stats={"fp_pfx": (pfx[0], pfx[-1])}
-    ).filter(F.col("fp_pfx").isin(*pfx))
-    return (
-        corpus.select(F.col(idx_id).alias("_corpus_id"), "fp_md5")
-        .join(
-            F.broadcast(delta.select(F.col(id_col), "fp_md5")), "fp_md5"
-        )
-        .groupBy(id_col)
-        .agg(F.min("_corpus_id").alias("keep_id"))
+    return cross.groupBy(F.col("idb").alias(id_col)).agg(
+        F.min("ida").alias("keep_id")
     )
 
 
 # --------------------------------------------- Hamming (phash) index
-
-def _hamming_family_digest(max_distance: int, bits: int,
-                           bucket_mod: int) -> str:
-    return hashlib.md5(
-        f"hamming,{max_distance},{bits},{bucket_mod}".encode()
-    ).hexdigest()
-
-
-def _chunk_frame(
-    sigs: DataFrame,
-    id_col: str,
-    sig_col: str,
-    max_distance: int,
-    bits: int,
-    bucket_mod: int,
-) -> DataFrame:
-    """(id, sig, chunk, chunk_val, pfx) — the pigeonhole chunk buckets
-    of ``ops.dedup.hamming_neardup_pairs`` (same split: max_distance+1
-    chunks, last chunk absorbs remainder bits), plus the bounded
-    pruning key pfx = chunk * bucket_mod + chunk_val % bucket_mod."""
-    chunks = max_distance + 1
-    width = bits // chunks
-
-    def chunk_val(c: int):
-        w = width if c < chunks - 1 else bits - width * (chunks - 1)
-        return F.shiftright(F.col(sig_col), c * width).bitwiseAND(
-            F.lit((1 << w) - 1)
-        )
-
-    entries = F.array(
-        *[
-            F.struct(F.lit(c).alias("chunk"), chunk_val(c).alias("chunk_val"))
-            for c in range(chunks)
-        ]
-    )
-    return sigs.select(
-        F.col(id_col),
-        F.col(sig_col).alias("sig"),
-        F.explode(entries).alias("__cb"),
-    ).select(
-        id_col,
-        "sig",
-        F.col("__cb.chunk").alias("chunk"),
-        F.col("__cb.chunk_val").alias("chunk_val"),
-        (
-            F.col("__cb.chunk") * bucket_mod
-            + F.pmod(F.col("__cb.chunk_val"), F.lit(bucket_mod))
-        ).cast("int").alias("pfx"),
-    )
-
 
 def build_hamming_dedup_index(
     sigs: DataFrame,
@@ -520,40 +589,10 @@ def build_hamming_dedup_index(
     stats.  The same incremental story as the LSH/digest stores: one
     fingerprint pass over the corpus, ever; appends touch only new
     data; probes broadcast the batch against a file-pruned scan."""
-    table = SnapshotTable(table_root, spark)
-    return table.write(
-        _chunk_frame(sigs, id_col, sig_col, max_distance, bits, bucket_mod),
-        partition_by="pfx",
-        num_partitions=2 * (max_distance + 1) * bucket_mod,
-        stats_cols=["pfx"],
-        properties={
-            **(extra_properties or {}),
-            "index": "hamming_dedup",
-            "id_col": id_col,
-            "max_distance": int(max_distance),
-            "bits": int(bits),
-            "bucket_mod": int(bucket_mod),
-            "family_digest": _hamming_family_digest(
-                max_distance, bits, bucket_mod
-            ),
-        },
+    return _build(
+        _hamming_index(max_distance, bits, bucket_mod), sigs, table_root,
+        spark, id_col, sig_col, extra_properties,
     )
-
-
-def _hamming_family(table_root: str, spark: SparkSession,
-                    action: str) -> tuple:
-    table, props = _index_family(table_root, spark, "hamming_dedup")
-    max_distance = int(props["max_distance"])
-    bits = int(props["bits"])
-    bucket_mod = int(props["bucket_mod"])
-    expect = _hamming_family_digest(max_distance, bits, bucket_mod)
-    if props.get("family_digest") not in (None, expect):
-        raise ValueError(
-            f"{action}: this build's chunk family does not reproduce the "
-            "one this index was built with (family_digest mismatch) — "
-            "chunk buckets would be incomparable; rebuild the index"
-        )
-    return table, props, max_distance, bits, bucket_mod
 
 
 def append_to_hamming_dedup_index(
@@ -567,29 +606,9 @@ def append_to_hamming_dedup_index(
     """Chunk ONLY the new fingerprints (family read from the manifest,
     digest-verified) and append them as new files — ingest cost ∝ new
     data.  Returns the new snapshot id."""
-    table, props, max_distance, bits, bucket_mod = _hamming_family(
-        table_root, spark, "append"
-    )
-    if props.get("id_col") != id_col:
-        raise ValueError(
-            f"append id_col {id_col!r} != index id_col {props.get('id_col')!r}"
-        )
-    if properties is not None:
-        properties = {
-            **properties,
-            **{k: props[k] for k in (
-                "index", "id_col", "max_distance", "bits", "bucket_mod",
-                "family_digest",
-            ) if k in props},
-        }
-    return table.append(
-        _chunk_frame(
-            new_sigs, id_col, sig_col, max_distance, bits, bucket_mod
-        ),
-        partition_by="pfx",
-        num_partitions=2 * (max_distance + 1) * bucket_mod,
-        stats_cols=["pfx"],
-        properties=properties,
+    return _append_checked(
+        "hamming_dedup", new_sigs, table_root, spark, id_col, sig_col,
+        properties,
     )
 
 
@@ -599,28 +618,8 @@ def neardup_pairs_from_hamming_index(
     """(id1, id2, hamming) for every indexed pair within max_distance —
     equals ``hamming_neardup_pairs`` over the same fingerprints (the
     chunk definition is shared), with zero fingerprint recompute."""
-    table, props, max_distance, _, _ = _hamming_family(
-        table_root, spark, "pairs"
-    )
-    id_col = props.get("id_col", "image_id")
-    buckets = table.scan().select(id_col, "sig", "chunk", "chunk_val")
-    a = buckets.select(
-        F.col(id_col).alias("id1"), F.col("sig").alias("s1"),
-        "chunk", "chunk_val",
-    )
-    b = buckets.select(
-        F.col(id_col).alias("id2"), F.col("sig").alias("s2"),
-        "chunk", "chunk_val",
-    )
-    return (
-        a.join(b, ["chunk", "chunk_val"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", "s1", "s2")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))))
-        .filter(F.col("hamming") <= max_distance)
-        .select("id1", "id2", "hamming")
-    )
+    table, props, spec = _open(table_root, spark, "hamming_dedup", "pairs")
+    return _pairs(spec, table.scan(), props["id_col"])
 
 
 def probe_hamming_dedup_index(
@@ -636,108 +635,21 @@ def probe_hamming_dedup_index(
     against the file-pruned index scan (no corpus shuffle), unioned
     with batch-internal pairs.  Run BEFORE appending so near-duplicate
     images can be dropped from the incoming batch."""
-    table, props, max_distance, bits, bucket_mod = _hamming_family(
-        table_root, spark, "probe"
-    )
-    idx_id = props.get("id_col", "image_id")
-    delta = _chunk_frame(
-        new_sigs, id_col, sig_col, max_distance, bits, bucket_mod
-    ).localCheckpoint(eager=True)  # used 3x: pfx set, corpus join, self-join
-    pfx = sorted(
-        r["pfx"] for r in delta.select("pfx").distinct().collect()
-    )
-    if not pfx:
-        return delta.select(
-            F.col(id_col).alias("id1"),
-            F.col(id_col).alias("id2"),
-            F.lit(0).alias("hamming"),
-        ).limit(0)
-    corpus = table.scan(
-        min_stats={"pfx": (pfx[0], pfx[-1])}
-    ).filter(F.col("pfx").isin(*pfx))
-    cross = (
-        corpus.select(
-            F.col(idx_id).alias("ia"), F.col("sig").alias("sa"),
-            "chunk", "chunk_val",
-        )
-        .join(
-            F.broadcast(
-                delta.select(
-                    F.col(id_col).alias("ib"), F.col("sig").alias("sb"),
-                    "chunk", "chunk_val",
-                )
-            ),
-            ["chunk", "chunk_val"],
-        )
-        .filter(F.col("ia") != F.col("ib"))
-        .select(
-            F.least("ia", "ib").alias("id1"),
-            F.greatest("ia", "ib").alias("id2"),
-            F.col("sa").alias("s1"),
-            F.col("sb").alias("s2"),
-        )
-    )
-    da = delta.select(
-        F.col(id_col).alias("id1"), F.col("sig").alias("s1"),
-        "chunk", "chunk_val",
-    )
-    db = delta.select(
-        F.col(id_col).alias("id2"), F.col("sig").alias("s2"),
-        "chunk", "chunk_val",
-    )
-    within = (
-        da.join(db, ["chunk", "chunk_val"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", "s1", "s2")
-    )
-    return (
-        cross.unionByName(within)
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))))
-        .filter(F.col("hamming") <= max_distance)
-        .select("id1", "id2", "hamming")
+    return _probe_pairs(
+        table_root, spark, "hamming_dedup", new_sigs, id_col, sig_col
     )
 
 
 # -------------------------------------------------------- ingest gate
 
-def ingest_gate(
-    batch: DataFrame,
-    digest_root: str,
-    lsh_root: str,
-    spark: SparkSession,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    append: bool = True,
-) -> DataFrame:
-    """The full ingest-time dedup gate in one call: classify every
-    incoming document against BOTH persisted indexes and (optionally)
-    append only the survivors.  Returns one row per batch document:
-
-    - ``disposition='exact_dup'``, keep_id = the smallest committed id
-      with byte-identical normalized text (digest index);
-    - ``disposition='near_dup'``, keep_id = the smallest committed
-      LSH near-dup candidate partner (exact wins when both hit);
-    - ``disposition='new'``, keep_id = NULL — appended to both indexes
-      when ``append=True``.
-
-    Batch ids must be disjoint from committed ids (the gate's contract
-    — ingests assign fresh ids).  Within-batch near-dup pairs are NOT
-    dropped here (both sides are unseen; resolve them upstream with
-    ``lsh_candidate_pairs`` if single-batch dedup is wanted) — the gate
-    answers "is this new against the committed corpus".  Plan shape:
-    both probes broadcast the (micro-)batch against file-pruned index
-    scans; the committed corpus never shuffles and no committed text is
-    re-read."""
-    # pay the batch's upstream plan (file read + transforms) exactly
-    # once — it feeds the id projection, both probes, and the
-    # survivors join
-    batch = batch.localCheckpoint(eager=True)
+def _gate(batch: DataFrame, id_col: str, exact: DataFrame,
+          pairs: DataFrame, append: bool, appenders: list) -> DataFrame:
+    """The classify-and-append body both ingest gates share: one
+    (id, disposition, keep_id) row per batch id from the exact probe's
+    (id, keep_id) and the near-dup probe's pairs; with ``append`` each
+    of ``appenders`` receives the checkpointed survivors."""
     batch_ids = batch.select(F.col(id_col))
-    exact = probe_digest_dedup_index(
-        digest_root, spark, batch, id_col, text_col
-    ).withColumnRenamed("keep_id", "_exact_keep")
-    pairs = probe_lsh_dedup_index(lsh_root, spark, batch, id_col, text_col)
+    exact = exact.withColumnRenamed("keep_id", "_exact_keep")
     b1 = batch_ids.select(F.col(id_col).alias("id1"))
     b2 = batch_ids.select(F.col(id_col).alias("id2"))
     # corpus partner = the pair side that is NOT a batch id
@@ -777,15 +689,59 @@ def ingest_gate(
             "semi",
         ).localCheckpoint(eager=True)
         # a fully-duplicate batch (the very case the gate exists for)
-        # must not commit two empty snapshot versions per micro-batch
+        # must not commit empty snapshot versions per micro-batch
         if not survivors.isEmpty():
-            append_to_digest_dedup_index(
-                survivors, digest_root, spark, id_col, text_col
-            )
-            append_to_lsh_dedup_index(
-                survivors, lsh_root, spark, id_col, text_col
-            )
+            for add in appenders:
+                add(survivors)
     return decisions
+
+
+def ingest_gate(
+    batch: DataFrame,
+    digest_root: str,
+    lsh_root: str,
+    spark: SparkSession,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    append: bool = True,
+) -> DataFrame:
+    """The full ingest-time dedup gate in one call: classify every
+    incoming document against BOTH persisted indexes and (optionally)
+    append only the survivors.  Returns one row per batch document:
+
+    - ``disposition='exact_dup'``, keep_id = the smallest committed id
+      with byte-identical normalized text (digest index);
+    - ``disposition='near_dup'``, keep_id = the smallest committed
+      LSH near-dup candidate partner (exact wins when both hit);
+    - ``disposition='new'``, keep_id = NULL — appended to both indexes
+      when ``append=True``.
+
+    Batch ids must be disjoint from committed ids (the gate's contract
+    — ingests assign fresh ids).  Within-batch near-dup pairs are NOT
+    dropped here (both sides are unseen; resolve them upstream with
+    ``lsh_candidate_pairs`` if single-batch dedup is wanted) — the gate
+    answers "is this new against the committed corpus".  Plan shape:
+    both probes broadcast the (micro-)batch against file-pruned index
+    scans; the committed corpus never shuffles and no committed text is
+    re-read."""
+    # pay the batch's upstream plan (file read + transforms) exactly
+    # once — it feeds the id projection, both probes, and the
+    # survivors join
+    batch = batch.localCheckpoint(eager=True)
+    return _gate(
+        batch, id_col,
+        probe_digest_dedup_index(digest_root, spark, batch, id_col, text_col),
+        probe_lsh_dedup_index(lsh_root, spark, batch, id_col, text_col),
+        append,
+        [
+            lambda s: append_to_digest_dedup_index(
+                s, digest_root, spark, id_col, text_col
+            ),
+            lambda s: append_to_lsh_dedup_index(
+                s, lsh_root, spark, id_col, text_col
+            ),
+        ],
+    )
 
 
 def media_ingest_gate(
@@ -830,59 +786,26 @@ def media_ingest_gate(
     fp = compute_phash(
         batch, bytes_col=bytes_col, fmt_col=fmt_col, out_col=sig_col
     ).localCheckpoint(eager=True)
-    batch_ids = fp.select(F.col(id_col))
-    exact = probe_digest_dedup_index(
-        digest_root, spark, fp, id_col, bytes_col
-    ).withColumnRenamed("keep_id", "_exact_keep")
-    pairs = probe_hamming_dedup_index(
-        hamming_root, spark, fp.filter(F.col(f"{sig_col}_ok")),
-        id_col, sig_col,
-    )
-    b1 = batch_ids.select(F.col(id_col).alias("id1"))
-    b2 = batch_ids.select(F.col(id_col).alias("id2"))
-    # corpus partner = the pair side that is NOT a batch id
-    near = (
-        pairs.join(F.broadcast(b1), "id1", "semi")
-        .join(F.broadcast(b2), "id2", "anti")
-        .select(F.col("id1").alias(id_col), F.col("id2").alias("_partner"))
-        .unionByName(
-            pairs.join(F.broadcast(b2), "id2", "semi")
-            .join(F.broadcast(b1), "id1", "anti")
-            .select(
-                F.col("id2").alias(id_col), F.col("id1").alias("_partner")
+
+    def append_sigs(survivors: DataFrame) -> None:
+        sigs = survivors.filter(F.col(f"{sig_col}_ok"))
+        if not sigs.isEmpty():
+            append_to_hamming_dedup_index(
+                sigs, hamming_root, spark, id_col, sig_col
             )
-        )
-        .groupBy(id_col)
-        .agg(F.min("_partner").alias("_near_keep"))
+
+    return _gate(
+        fp, id_col,
+        probe_digest_dedup_index(digest_root, spark, fp, id_col, bytes_col),
+        probe_hamming_dedup_index(
+            hamming_root, spark, fp.filter(F.col(f"{sig_col}_ok")),
+            id_col, sig_col,
+        ),
+        append,
+        [
+            lambda s: append_to_digest_dedup_index(
+                s, digest_root, spark, id_col, bytes_col
+            ),
+            append_sigs,
+        ],
     )
-    decisions = (
-        batch_ids.join(F.broadcast(exact), id_col, "left")
-        .join(F.broadcast(near), id_col, "left")
-        .select(
-            F.col(id_col),
-            F.when(F.col("_exact_keep").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("_near_keep").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("new"))
-            .alias("disposition"),
-            F.coalesce("_exact_keep", "_near_keep").alias("keep_id"),
-        )
-        # materialize BEFORE the appends mutate the indexes the probes
-        # read — decisions must reflect the pre-ingest corpus
-        .localCheckpoint(eager=True)
-    )
-    if append:
-        survivors = fp.join(
-            decisions.filter(F.col("disposition") == "new").select(id_col),
-            id_col,
-            "semi",
-        ).localCheckpoint(eager=True)
-        if not survivors.isEmpty():
-            append_to_digest_dedup_index(
-                survivors, digest_root, spark, id_col, bytes_col
-            )
-            sigs = survivors.filter(F.col(f"{sig_col}_ok"))
-            if not sigs.isEmpty():
-                append_to_hamming_dedup_index(
-                    sigs, hamming_root, spark, id_col, sig_col
-                )
-    return decisions

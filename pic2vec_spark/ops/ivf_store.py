@@ -39,7 +39,43 @@ from pic2vec_spark.ops.knn import (  # noqa: F401  (re-exported)
     _with_centroid_cos,
     assign_cells,
 )
-from pic2vec_spark.snapshots import SnapshotTable
+from pic2vec_spark.ops.dedup_store import (
+    _append,
+    _build,
+    _check_family,
+    _key_scan,
+    _KeyIndex,
+    _manifest_props,
+)
+
+
+def _centroid_digest(centroids: np.ndarray) -> str:
+    import hashlib
+
+    arr = np.ascontiguousarray(centroids, dtype=np.float64)
+    return hashlib.md5(
+        arr.tobytes() + str(arr.shape).encode()
+    ).hexdigest()
+
+
+def _ivf_index(centroids: np.ndarray) -> _KeyIndex:
+    """The IVF cells as a key index: ``assign_cells`` rows partitioned
+    by cell.  The quantizer IS part of the index: a probe under
+    different centroids would scan the wrong cells and return silently
+    wrong neighbors, so its digest is the family identity."""
+    n_cells = int(centroids.shape[0])
+    return _KeyIndex(
+        "ivf",
+        {"n_cells": n_cells, "centroid_digest": _centroid_digest(centroids)},
+        "cell",
+        # 2x cells: hash collisions then rarely co-locate two cells in
+        # one file, keeping the per-file cell range tight (pruning stays
+        # near-exact); collisions remain CORRECT, just less selective
+        2 * n_cells,
+        lambda df, id_col, vec_col: assign_cells(df, centroids, id_col, vec_col),
+        digest_key="centroid_digest",
+        records_id=False,
+    )
 
 
 def build_ivf_index(
@@ -55,35 +91,10 @@ def build_ivf_index(
     returns the snapshot id.  ``partition_by='cell'`` gives one data
     file per cell-hash bucket and the manifest records each file's
     [min_cell, max_cell], which is what ``probe_ivf_index`` prunes on."""
-    assigned = assign_cells(corpus, centroids, id_col, vec_col)
-    table = SnapshotTable(table_root, spark)
-    return table.write(
-        assigned,
-        partition_by="cell",
-        # 2x cells: hash collisions then rarely co-locate two cells in
-        # one file, keeping the per-file cell range tight (pruning stays
-        # near-exact); collisions remain CORRECT, just less selective
-        num_partitions=2 * int(centroids.shape[0]),
-        stats_cols=["cell"],
-        properties={
-            **(extra_properties or {}),
-            "index": "ivf",
-            "n_cells": int(centroids.shape[0]),
-            # the quantizer IS part of the index: a probe under different
-            # centroids would scan the wrong cells and return silently
-            # wrong neighbors — probe_ivf_index refuses on mismatch
-            "centroid_digest": _centroid_digest(centroids),
-        },
+    return _build(
+        _ivf_index(centroids), corpus, table_root, spark, id_col, vec_col,
+        extra_properties,
     )
-
-
-def _centroid_digest(centroids: np.ndarray) -> str:
-    import hashlib
-
-    arr = np.ascontiguousarray(centroids, dtype=np.float64)
-    return hashlib.md5(
-        arr.tobytes() + str(arr.shape).encode()
-    ).hexdigest()
 
 
 def append_to_ivf_index(
@@ -107,40 +118,19 @@ def append_to_ivf_index(
     per-file cell stats, and the appended files carry their own stats
     rows.  Returns the new snapshot id (the parent snapshot remains
     readable — time travel across index versions)."""
-    table = SnapshotTable(table_root, spark)
-    man = table.manifest()
-    if man is None:
-        raise FileNotFoundError(
-            f"no IVF index at {table_root} — build_ivf_index first"
-        )
-    recorded = (man.get("properties") or {}).get("centroid_digest")
-    if recorded is not None and recorded != _centroid_digest(centroids):
-        raise ValueError(
-            "append centroids do not match the quantizer this index was "
-            "built with (centroid_digest mismatch) — appended rows would "
-            "land in cells probes never scan; rebuild the index to "
-            "re-quantize"
-        )
-    assigned = assign_cells(new_corpus, centroids, id_col, vec_col)
-    # a caller-supplied dict REPLACES the manifest properties wholesale
-    # (append only carries the parent's when properties is None) — merge
-    # the index-identity keys back on top, or the quantizer guard above
-    # would silently disappear from the committed manifest and the next
-    # mismatched probe/append would go unchecked
-    if properties is not None:
-        properties = {
-            **properties,
-            "index": "ivf",
-            "n_cells": int(centroids.shape[0]),
-            "centroid_digest": _centroid_digest(centroids),
-        }
-    return table.append(
-        assigned,
-        partition_by="cell",
-        num_partitions=2 * int(centroids.shape[0]),
-        stats_cols=["cell"],
-        properties=properties,
+    spec = _ivf_index(centroids)
+    table, props = _manifest_props(
+        table_root, spark,
+        f"no IVF index at {table_root} — build_ivf_index first",
     )
+    _check_family(
+        spec, props,
+        "append centroids do not match the quantizer this index was "
+        "built with (centroid_digest mismatch) — appended rows would "
+        "land in cells probes never scan; rebuild the index to "
+        "re-quantize",
+    )
+    return _append(spec, table, new_corpus, id_col, vec_col, properties)
 
 
 def probe_ivf_index(
@@ -162,19 +152,17 @@ def probe_ivf_index(
     construction — it is the coarse quantizer), so collecting it to
     drive manifest pruning costs one tiny aggregate over the QUERY side,
     never a corpus scan."""
-    table = SnapshotTable(table_root, spark)
-    man = table.manifest()
-    if man is None:
-        raise FileNotFoundError(f"no IVF index at {table_root}")
-    recorded = (man.get("properties") or {}).get("centroid_digest")
-    if recorded is not None and recorded != _centroid_digest(centroids):
-        raise ValueError(
-            "probe centroids do not match the quantizer this index was "
-            "built with (centroid_digest mismatch) — rebuild the index "
-            "or probe with the original centroids; a mismatched probe "
-            "would scan the wrong cells and return silently wrong "
-            "neighbors"
-        )
+    table, props = _manifest_props(
+        table_root, spark, f"no IVF index at {table_root}"
+    )
+    _check_family(
+        _ivf_index(centroids), props,
+        "probe centroids do not match the quantizer this index was "
+        "built with (centroid_digest mismatch) — rebuild the index "
+        "or probe with the original centroids; a mismatched probe "
+        "would scan the wrong cells and return silently wrong "
+        "neighbors",
+    )
     qc = _with_centroid_cos(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
@@ -195,10 +183,10 @@ def probe_ivf_index(
         .select("query_id", "qvec", (F.col("cell0") + 1).cast("int").alias("cell"))
         .localCheckpoint(eager=True)  # probed twice: cell-set + join
     )
-    probed_cells = sorted(
-        r["cell"] for r in probes.select("cell").distinct().collect()
-    )
-    if not probed_cells:
+    # file-level pruning: a file whose recorded cell range misses every
+    # probed cell is never opened
+    corpus = _key_scan(table, "cell", probes)
+    if corpus is None:
         # empty query set: return the correctly-typed empty result, the
         # same grace ivf_topk has (no files are opened)
         from pyspark.sql import types as T
@@ -215,13 +203,6 @@ def probe_ivf_index(
                 ]
             ),
         )
-    # file-level pruning: one range scan over [min, max] probed cell —
-    # a file whose recorded cell range misses every probed cell is
-    # never opened; the residual in-range misses are dropped by the
-    # row filter below (cheap: the isin lands in PushedFilters too)
-    corpus = table.scan(
-        min_stats={"cell": (probed_cells[0], probed_cells[-1])}
-    ).filter(F.col("cell").isin(*probed_cells))
     cand = (
         corpus.join(F.broadcast(probes), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))

@@ -28,6 +28,78 @@ from pic2vec_spark.snapshots import SnapshotTable
 from pic2vec_spark.synth import IMAGES_SCHEMA
 
 
+def _start_stream(
+    spark: SparkSession,
+    schema,
+    input_dir: str,
+    checkpoint_dir: str,
+    files_per_trigger: int,
+    sink,
+    available_now: bool,
+):
+    """Start a parquet file-source stream whose micro-batches go to the
+    ``sink(batch_df, batch_id)`` foreachBatch body; ``available_now``
+    processes the backlog, then stops.  Returns the started query."""
+    writer = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _stamp_state(
+    batch_df: DataFrame,
+    batch_id: int,
+    table: SnapshotTable,
+    stamp_key: str,
+    owner: str,
+    target: str = "gate",
+    fresh: str = "fresh roots",
+):
+    """The batch-stamp check every stamped sink shares (index sinks,
+    media and repost gates): foreachBatch replays a batch after
+    failure, so the sink's table manifest carries ``stamp_key``.
+    Returns None when there is nothing to do — an empty batch, or a
+    batch id equal to the stamp (the replay foreachBatch can actually
+    produce: the most recent batch, failed mid-commit last run) — and
+    otherwise ``(manifest or None, properties)``.  A batch id behind the
+    stamp raises: that is a stream restarted with a FRESH checkpoint
+    dir against an existing table (ids restart at 0), and silently
+    treating every batch as a replay would stop ingest forever."""
+    if batch_df.isEmpty():
+        return None
+    man = table.manifest()
+    props = (man.get("properties") or {}) if man is not None else {}
+    last = props.get(stamp_key)
+    if last is not None and int(batch_id) == int(last):
+        return None
+    if last is not None and int(batch_id) < int(last):
+        raise ValueError(
+            f"batch id {int(batch_id)} is behind the {owner}'s "
+            f"{stamp_key} {int(last)} — this stream's checkpoint "
+            f"does not belong to this {target}; reuse the original "
+            f"checkpoint dir, or point the stream at {fresh}"
+        )
+    return man, props
+
+
+def _commit_stamped(table: SnapshotTable, man, props: dict, name: str,
+                    batch_id: int, rows: DataFrame) -> None:
+    """Commit a gate's output rows with the ``gate_last_batch`` stamp:
+    the first batch writes the named table, later ones append with the
+    parent's properties carried."""
+    stamp = {"gate_last_batch": int(batch_id)}
+    if man is None:
+        table.write(rows, properties={"table": name, **stamp})
+    else:
+        table.append(rows, properties={**props, **stamp})
+
+
 def stream_featurize(
     spark: SparkSession,
     input_dir: str,
@@ -39,11 +111,6 @@ def stream_featurize(
     """Stream image-table parquet files from ``input_dir`` into a feature
     SnapshotTable at ``table_root``.  Returns the (started) query."""
     plan = plan or FeaturizerPlan.build()
-    stream = (
-        spark.readStream.schema(IMAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -51,14 +118,10 @@ def stream_featurize(
         table = SnapshotTable(table_root, batch_df.sparkSession)
         incremental_featurize(batch_df, table, plan)
 
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_stream(
+        spark, IMAGES_SCHEMA, input_dir, checkpoint_dir, 8, sink,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_asof(
@@ -259,11 +322,6 @@ def stream_merge(
     from pyspark.sql import Window
 
     table = SnapshotTable(table_root, spark)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # NULL keys have no merge identity (and would feed None bounds
@@ -310,12 +368,9 @@ def stream_merge(
                 return
         table.merge(updates, key)
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_stream(
+        spark, schema, input_dir, checkpoint_dir, 8, sink, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_agg_view(
@@ -359,11 +414,6 @@ def stream_agg_view(
     from pic2vec_spark.ops.ivm import agg_state, merge_agg_states
 
     table = SnapshotTable(table_root, spark)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def to_keyed(state: DataFrame) -> DataFrame:
         return state.withColumn(
@@ -407,12 +457,10 @@ def stream_agg_view(
             merged, "__k", properties={**props, "ivm_last_batch": int(batch_id)}
         )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_stream(
+        spark, schema, input_dir, checkpoint_dir, files_per_trigger, sink,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_drift(
@@ -490,11 +538,6 @@ def stream_quality(
     from pic2vec_spark.ops.quality import check_constraints
 
     table = SnapshotTable(table_root, spark)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         man = table.manifest()
@@ -518,14 +561,10 @@ def stream_quality(
         else:
             table.append(report, num_partitions=1, properties=props)
 
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_stream(
+        spark, schema, input_dir, checkpoint_dir, files_per_trigger, sink,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------------------ ANN index
@@ -544,41 +583,25 @@ def _stamped_index_sink(
     append_fn,
 ) -> None:
     """The shared batch-stamp protocol behind every streamed index sink
-    (IVF / LSH / digest).  Exactly-once: foreachBatch replays a batch
-    after failure, and a replayed append would insert every row twice,
-    so the committed manifest carries ``stamp_key`` and
+    (IVF / LSH / digest / Hamming).  Exactly-once: foreachBatch replays
+    a batch after failure, and a replayed append would insert every row
+    twice, so the committed manifest carries ``stamp_key``
+    (``_stamp_state``: equal id → no-op, id behind → raise) and
 
     - no manifest yet → ``build_fn(extra_properties={stamp: id})``;
-    - batch id == stamp → no-op (the replay foreachBatch can actually
-      produce: the most recent batch, failed mid-commit last run);
-    - batch id < stamp → raise.  Ids far behind the stamp are NOT a
-      replay — this is a stream restarted with a FRESH checkpoint dir
-      against an existing index (ids restart at 0): silently treating
-      every batch as a replay would stop ingest forever while probes
-      serve stale results;
     - otherwise → ``append_fn(properties={**manifest props, stamp})``
       (index-identity properties are preserved across appends)."""
-    if batch_df.isEmpty():
+    state = _stamp_state(
+        batch_df, batch_id, SnapshotTable(table_root, batch_df.sparkSession),
+        stamp_key, "index", "index table", "a fresh table_root",
+    )
+    if state is None:
         return
-    spark = batch_df.sparkSession
-    man = SnapshotTable(table_root, spark).manifest()
+    man, props = state
     if man is None:
         build_fn(extra_properties={stamp_key: int(batch_id)})
-        return
-    last = (man.get("properties") or {}).get(stamp_key)
-    if last is not None and int(batch_id) == int(last):
-        return  # replayed batch (failed mid-commit last run): ingested
-    if last is not None and int(batch_id) < int(last):
-        raise ValueError(
-            f"batch id {int(batch_id)} is behind the index's "
-            f"{stamp_key} {int(last)} — this stream's checkpoint "
-            "does not belong to this index table; reuse the original "
-            "checkpoint dir, or point the stream at a fresh table_root"
-        )
-    append_fn(
-        properties={**(man.get("properties") or {}),
-                    stamp_key: int(batch_id)}
-    )
+    else:
+        append_fn(properties={**props, stamp_key: int(batch_id)})
 
 
 def ivf_index_sink(batch_df: DataFrame, batch_id: int, table_root: str,
@@ -593,16 +616,11 @@ def ivf_index_sink(batch_df: DataFrame, batch_id: int, table_root: str,
         build_ivf_index,
     )
 
-    spark = batch_df.sparkSession
+    args = (batch_df, centroids, table_root, batch_df.sparkSession)
     _stamped_index_sink(
         batch_df, batch_id, table_root, "ivf_last_batch",
-        build_fn=lambda extra_properties: build_ivf_index(
-            batch_df, centroids, table_root, spark,
-            extra_properties=extra_properties,
-        ),
-        append_fn=lambda properties: append_to_ivf_index(
-            batch_df, centroids, table_root, spark, properties=properties
-        ),
+        lambda **kw: build_ivf_index(*args, **kw),
+        lambda **kw: append_to_ivf_index(*args, **kw),
     )
 
 
@@ -619,23 +637,13 @@ def stream_index_vectors(
     append new cell-partitioned files only (ingest cost ∝ new data; see
     append_to_ivf_index).  ``probe_ivf_index`` against ``table_root``
     serves freshness-inclusive top-k between micro-batches."""
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    return _start_stream(
+        spark, EMBEDDINGS_SCHEMA, input_dir, checkpoint_dir, 1,
+        lambda batch_df, batch_id: ivf_index_sink(
+            batch_df, batch_id, table_root, centroids
+        ),
+        available_now,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_index_sink(batch_df, batch_id, table_root, centroids)
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------------ LSH dedup index
@@ -659,12 +667,11 @@ def lsh_index_sink(batch_df: DataFrame, batch_id: int,
     spark = batch_df.sparkSession
     _stamped_index_sink(
         batch_df, batch_id, table_root, "lsh_last_batch",
-        build_fn=lambda extra_properties: build_lsh_dedup_index(
-            batch_df, table_root, spark, **family,
-            extra_properties=extra_properties,
+        lambda **kw: build_lsh_dedup_index(
+            batch_df, table_root, spark, **family, **kw
         ),
-        append_fn=lambda properties: append_to_lsh_dedup_index(
-            batch_df, table_root, spark, properties=properties
+        lambda **kw: append_to_lsh_dedup_index(
+            batch_df, table_root, spark, **kw
         ),
     )
 
@@ -684,23 +691,13 @@ def stream_index_documents(
     ``probe_lsh_dedup_index`` against ``table_root`` serves the
     ingest-time dedup gate and ``neardup_pairs_from_index`` the full
     candidate set, both freshness-inclusive."""
-    stream = (
-        spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    return _start_stream(
+        spark, DOCUMENTS_STREAM_SCHEMA, input_dir, checkpoint_dir, 1,
+        lambda batch_df, batch_id: lsh_index_sink(
+            batch_df, batch_id, table_root, **family
+        ),
+        available_now,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        lsh_index_sink(batch_df, batch_id, table_root, **family)
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --------------------------------------------------- exact digest index
@@ -720,12 +717,11 @@ def digest_index_sink(batch_df: DataFrame, batch_id: int,
     spark = batch_df.sparkSession
     _stamped_index_sink(
         batch_df, batch_id, table_root, "digest_last_batch",
-        build_fn=lambda extra_properties: build_digest_dedup_index(
-            batch_df, table_root, spark, prefix_chars=prefix_chars,
-            extra_properties=extra_properties,
+        lambda **kw: build_digest_dedup_index(
+            batch_df, table_root, spark, prefix_chars=prefix_chars, **kw
         ),
-        append_fn=lambda properties: append_to_digest_dedup_index(
-            batch_df, table_root, spark, properties=properties
+        lambda **kw: append_to_digest_dedup_index(
+            batch_df, table_root, spark, **kw
         ),
     )
 
@@ -746,23 +742,13 @@ def stream_index_digests(
     this incoming document byte-identical to anything committed" and
     ``duplicate_groups_from_index`` the full group set, both
     freshness-inclusive."""
-    stream = (
-        spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    return _start_stream(
+        spark, DOCUMENTS_STREAM_SCHEMA, input_dir, checkpoint_dir, 1,
+        lambda batch_df, batch_id: digest_index_sink(
+            batch_df, batch_id, table_root, prefix_chars
+        ),
+        available_now,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        digest_index_sink(batch_df, batch_id, table_root, prefix_chars)
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --------------------------------------- Hamming (fingerprint) index
@@ -782,15 +768,14 @@ def hamming_index_sink(batch_df: DataFrame, batch_id: int,
     )
 
     spark = batch_df.sparkSession
+    cols = {"id_col": id_col, "sig_col": sig_col}
     _stamped_index_sink(
         batch_df, batch_id, table_root, "hamming_last_batch",
-        build_fn=lambda extra_properties: build_hamming_dedup_index(
-            batch_df, table_root, spark, id_col=id_col, sig_col=sig_col,
-            **family, extra_properties=extra_properties,
+        lambda **kw: build_hamming_dedup_index(
+            batch_df, table_root, spark, **cols, **family, **kw
         ),
-        append_fn=lambda properties: append_to_hamming_dedup_index(
-            batch_df, table_root, spark, id_col=id_col, sig_col=sig_col,
-            properties=properties,
+        lambda **kw: append_to_hamming_dedup_index(
+            batch_df, table_root, spark, **cols, **kw
         ),
     )
 
@@ -818,24 +803,15 @@ def stream_index_fingerprints(
     max_distance bits of anything committed) and
     ``neardup_pairs_from_hamming_index`` the full pair set, both
     freshness-inclusive."""
-    stream = (
-        spark.readStream.schema(f"{id_col} {id_type}, {sig_col} bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    return _start_stream(
+        spark, f"{id_col} {id_type}, {sig_col} bigint", input_dir,
+        checkpoint_dir, 1,
+        lambda batch_df, batch_id: hamming_index_sink(
+            batch_df, batch_id, table_root,
+            id_col=id_col, sig_col=sig_col, **family,
+        ),
+        available_now,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        hamming_index_sink(batch_df, batch_id, table_root,
-                           id_col=id_col, sig_col=sig_col, **family)
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------ streaming media gate
@@ -875,22 +851,14 @@ def media_gate_sink(
     )
     from pic2vec_spark.ops.multimodal import compute_phash
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     dec_table = SnapshotTable(decisions_root, spark)
-    man = dec_table.manifest()
-    props = (man.get("properties") or {}) if man is not None else {}
-    last = props.get("gate_last_batch")
-    if last is not None and int(batch_id) == int(last):
-        return  # replayed batch (failed mid-commit last run): decided
-    if last is not None and int(batch_id) < int(last):
-        raise ValueError(
-            f"batch id {int(batch_id)} is behind the decisions table's "
-            f"gate_last_batch {int(last)} — this stream's checkpoint "
-            "does not belong to this gate; reuse the original "
-            "checkpoint dir, or point the stream at fresh roots"
-        )
+    state = _stamp_state(
+        batch_df, batch_id, dec_table, "gate_last_batch", "decisions table"
+    )
+    if state is None:
+        return
+    man, props = state
     if SnapshotTable(digest_root, spark).manifest() is None:
         fp = compute_phash(
             batch_df, bytes_col=bytes_col, fmt_col=fmt_col
@@ -913,19 +881,10 @@ def media_gate_sink(
             batch_df, digest_root, hamming_root, spark,
             id_col=id_col, bytes_col=bytes_col, fmt_col=fmt_col,
         )
-    rows = decisions.withColumn("batch_id", F.lit(int(batch_id)))
-    if man is None:
-        dec_table.write(
-            rows,
-            properties={
-                "table": "media_gate_decisions",
-                "gate_last_batch": int(batch_id),
-            },
-        )
-    else:
-        dec_table.append(
-            rows, properties={**props, "gate_last_batch": int(batch_id)}
-        )
+    _commit_stamped(
+        dec_table, man, props, "media_gate_decisions", batch_id,
+        decisions.withColumn("batch_id", F.lit(int(batch_id))),
+    )
 
 
 def stream_media_gate(
@@ -946,25 +905,14 @@ def stream_media_gate(
     snapshot table partitioned by disposition-bearing batch —
     downstream featurization consumes ``disposition = 'new'`` rows
     only, so the expensive CNN never sees a duplicate image."""
-    stream = (
-        spark.readStream.schema("image_id string, bytes binary, fmt string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        media_gate_sink(
+    return _start_stream(
+        spark, "image_id string, bytes binary, fmt string", input_dir,
+        checkpoint_dir, 1,
+        lambda batch_df, batch_id: media_gate_sink(
             batch_df, batch_id, digest_root, hamming_root, decisions_root
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def repost_gate_sink(
@@ -1006,22 +954,14 @@ def repost_gate_sink(
     which the event_id dedup makes value-identical."""
     from pic2vec_spark.ops.ranges import range_join
 
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     flags_table = SnapshotTable(flags_root, spark)
-    man = flags_table.manifest()
-    props = (man.get("properties") or {}) if man is not None else {}
-    last = props.get("gate_last_batch")
-    if last is not None and int(batch_id) == int(last):
-        return  # replayed batch (failed mid-commit last run): flagged
-    if last is not None and int(batch_id) < int(last):
-        raise ValueError(
-            f"batch id {int(batch_id)} is behind the flags table's "
-            f"gate_last_batch {int(last)} — this stream's checkpoint "
-            "does not belong to this gate; reuse the original "
-            "checkpoint dir, or point the stream at fresh roots"
-        )
+    state = _stamp_state(
+        batch_df, batch_id, flags_table, "gate_last_batch", "flags table"
+    )
+    if state is None:
+        return
+    man, props = state
 
     batch = batch_df.select(
         "user_id", "event_id",
@@ -1086,18 +1026,9 @@ def repost_gate_sink(
         )
     else:
         posts_table.append(batch, stats_cols=["ts_us"])
-    if man is None:
-        flags_table.write(
-            flags,
-            properties={
-                "table": "repost_gate_flags",
-                "gate_last_batch": int(batch_id),
-            },
-        )
-    else:
-        flags_table.append(
-            flags, properties={**props, "gate_last_batch": int(batch_id)}
-        )
+    _commit_stamped(
+        flags_table, man, props, "repost_gate_flags", batch_id, flags
+    )
 
 
 def stream_repost_gate(
@@ -1119,28 +1050,15 @@ def stream_repost_gate(
     of the batch ``repost_feature_matrix``/``temporal_image_repost``
     queries.  Flags land in a queryable snapshot table stamped per
     batch; replays are no-ops."""
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, event_id bigint, ts timestamp, phash64 bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        repost_gate_sink(
+    return _start_stream(
+        spark, "user_id bigint, event_id bigint, ts timestamp, phash64 bigint",
+        input_dir, checkpoint_dir, 1,
+        lambda batch_df, batch_id: repost_gate_sink(
             batch_df, batch_id, posts_root, flags_root,
             window_s=window_s, max_distance=max_distance,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def datacard_state_delta(
@@ -1184,37 +1102,26 @@ def datacard_state_delta(
         "n_docs", "n_toks", "n_chars", "min_tok", "max_tok",
         empty_arr.alias("arr"),
     )
-    kmv = base.agg(
-        F.slice(
-            F.array_sort(F.collect_set("__h")), 1, kmv_k
-        ).alias("arr")
-    ).select(
-        F.lit("__kmv__").alias("__k"),
-        F.lit(None).cast("double").alias("n_docs"),
-        F.lit(None).cast("double").alias("n_toks"),
-        F.lit(None).cast("double").alias("n_chars"),
-        F.lit(None).cast("double").alias("min_tok"),
-        F.lit(None).cast("double").alias("max_tok"),
-        "arr",
+    # the totals row carries every state column; the others are
+    # NULL-filled (same types) by unionByName
+    out = totals.unionByName(
+        base.agg(
+            F.slice(F.array_sort(F.collect_set("__h")), 1, kmv_k).alias("arr")
+        ).select(F.lit("__kmv__").alias("__k"), "arr"),
+        allowMissingColumns=True,
     )
-    out = totals.unionByName(kmv)
     for c in domain_cols:
-        dom = (
-            base.groupBy(c)
-            .agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-            .select(
+        out = out.unionByName(
+            base.groupBy(c).agg(
+                F.count(F.lit(1)).cast("double").alias("n_docs")
+            ).select(
                 F.concat_ws("\x1f", F.lit(c), F.col(c).cast("string")).alias(
                     "__k"
                 ),
                 "n_docs",
-                F.lit(None).cast("double").alias("n_toks"),
-                F.lit(None).cast("double").alias("n_chars"),
-                F.lit(None).cast("double").alias("min_tok"),
-                F.lit(None).cast("double").alias("max_tok"),
-                empty_arr.alias("arr"),
-            )
+            ),
+            allowMissingColumns=True,
         )
-        out = out.unionByName(dom)
     return out
 
 
@@ -1229,23 +1136,16 @@ def merge_datacard_states(
     aa = a.select("__k", *[F.col(c).alias(f"a_{c}") for c in cols])
     bb = b.select("__k", *[F.col(c).alias(f"b_{c}") for c in cols])
     j = aa.join(bb, "__k", "full_outer")
+
+    def added(c: str):
+        return F.when(
+            F.col(f"a_{c}").isNotNull() | F.col(f"b_{c}").isNotNull(),
+            F.coalesce(f"a_{c}", F.lit(0.0)) + F.coalesce(f"b_{c}", F.lit(0.0)),
+        ).alias(c)
+
     return j.select(
         "__k",
-        F.when(
-            F.col("a_n_docs").isNotNull() | F.col("b_n_docs").isNotNull(),
-            F.coalesce("a_n_docs", F.lit(0.0))
-            + F.coalesce("b_n_docs", F.lit(0.0)),
-        ).alias("n_docs"),
-        F.when(
-            F.col("a_n_toks").isNotNull() | F.col("b_n_toks").isNotNull(),
-            F.coalesce("a_n_toks", F.lit(0.0))
-            + F.coalesce("b_n_toks", F.lit(0.0)),
-        ).alias("n_toks"),
-        F.when(
-            F.col("a_n_chars").isNotNull() | F.col("b_n_chars").isNotNull(),
-            F.coalesce("a_n_chars", F.lit(0.0))
-            + F.coalesce("b_n_chars", F.lit(0.0)),
-        ).alias("n_chars"),
+        *[added(c) for c in ("n_docs", "n_toks", "n_chars")],
         F.least("a_min_tok", "b_min_tok").alias("min_tok"),
         F.greatest("a_max_tok", "b_max_tok").alias("max_tok"),
         F.when(
@@ -1310,7 +1210,12 @@ def datacard_from_state(state: DataFrame, kmv_k: int = 1024) -> DataFrame:
         .crossJoin(F.broadcast(tot.select(F.col("n_docs").alias("__t"))))
         .select(
             F.substring_index("__k", "\x1f", 1).alias("section"),
-            F.substring_index("__k", "\x1f", -1).alias("metric"),
+            # concat_ws skips a NULL domain value, so its key is the
+            # bare column name: no separator = the NULL metric
+            F.when(
+                F.instr("__k", "\x1f") > 0,
+                F.substring_index("__k", "\x1f", -1),
+            ).alias("metric"),
             F.round(F.col("n_docs") / F.col("__t"), 6).alias("value"),
         )
     )
@@ -1343,19 +1248,17 @@ def stream_datacard(
     restarts against a populated table raise rather than double-count).
     Returns the started query."""
     table = SnapshotTable(table_root, spark)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        man = table.manifest()
+        # an empty batch folds nothing, except that an empty FIRST batch
+        # still commits its (empty) stamped state — otherwise the next
+        # batch would find no table at a batch id != 0 and refuse
+        if batch_df.isEmpty() and man is not None:
             return
         delta = datacard_state_delta(
             batch_df, text_col, domain_cols, kmv_k
         )
-        man = table.manifest()
         if man is None:
             if int(batch_id) != 0:
                 raise ValueError(
@@ -1386,9 +1289,7 @@ def stream_datacard(
             merged, properties={**props, "datacard_last_batch": int(batch_id)}
         )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_stream(
+        spark, schema, input_dir, checkpoint_dir, files_per_trigger, sink,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

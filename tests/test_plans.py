@@ -179,3 +179,38 @@ def test_touch_attribution_single_window_no_join(spark):
     for node in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
                  "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert node not in plan
+
+
+def test_contrastive_triplets_broadcasts_only_the_pool(spark):
+    """The cluster table is corpus-sized: with size-based broadcasting
+    off, only the bounded negative pool (hinted) is broadcast and the
+    two same-cluster screen joins plan as shuffle joins, with the same
+    triplets as under the default threshold."""
+    from pic2vec_spark.ops.dedup import contrastive_triplets
+
+    corpus = spark.createDataFrame([(i,) for i in range(40)], "doc_id bigint")
+    pairs = spark.createDataFrame(
+        [(0, 1, 2), (10, 11, 1)], "id1 bigint, id2 bigint, hamming int"
+    )
+    clusters = spark.createDataFrame(
+        [(0, 0), (1, 0), (10, 10), (11, 10)], "doc_id bigint, cluster_id bigint"
+    )
+
+    def triplets():
+        return contrastive_triplets(
+            pairs, corpus, "doc_id", clusters=clusters, n_neg=3, pool_size=16
+        )
+
+    want = sorted(map(tuple, triplets().collect()))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = triplets()
+        plan = _final_plan(out)
+        got = sorted(map(tuple, out.collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert plan.count("BroadcastHashJoin") == 1
+    assert plan.count("SortMergeJoin") == 2
+    assert got == want and got
