@@ -17,6 +17,7 @@ Determinism notes shared by Spark and the DuckDB oracle:
 from __future__ import annotations
 
 import functools
+import json
 import os
 import re as _re
 import sys
@@ -31,6 +32,32 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 def _us(col: str):
     """Epoch µs (casts TIMESTAMP_NTZ; session TZ pinned UTC)."""
     return F.unix_micros(F.col(col).cast("timestamp"))
+
+
+QUERY_TAGS = ("bench", "scale_gate", "eager")
+
+
+def _tag(**tags):
+    """Role tags on a registered ``q_<name>`` query (untagged queries
+    play no extra role):
+
+    - ``bench=<group>``: ``bench.py`` times it in ``<group>``; the
+      headline ``value`` sums the flagship plus the ``relational``
+      group, every other group reports its own ``<group>_sec`` total;
+    - ``scale_gate=True``: ``scripts/scale_gate.py`` re-gates it at
+      sf0.1 — queries whose rows scale with the sf tables (queries over
+      the fixed synth image corpus would re-run bit-identical);
+    - ``eager=True``: its constructor runs Spark jobs, so plan-only
+      audits (``tests/test_plans.py``) skip it.
+    """
+    unknown = set(tags) - set(QUERY_TAGS)
+    assert not unknown, f"unknown query tags: {sorted(unknown)}"
+
+    def mark(fn):
+        fn.tags = tags
+        return fn
+
+    return mark
 
 
 SESSION_GAP_S = 1800
@@ -65,59 +92,6 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # point-in-time / windowed layer over events (user_id ≙ entity, value ≙ feature)
 # --------------------------------------------------------------------------
 
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each 'purchase' event sees the latest prior (ts, then
-    feature-first, then event_id tiebreak) non-purchase event's value."""
-    from pic2vec_spark.ops.asof import asof_join
-
-    ev = _events(spark, sf_dir)
-    features = ev.filter(F.col("event_type") != "purchase").select(
-        F.col("user_id").alias("entity_id"), "ts", "event_id", "value"
-    )
-    queries = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("entity_id"), "ts", "event_id"
-    )
-    joined = asof_join(
-        queries,
-        features,
-        on="entity_id",
-        ts="ts",
-        value_cols=["value"],
-        tiebreak="event_id",
-    )
-    return joined.select(
-        F.col("event_id"),
-        F.col("entity_id").alias("user_id"),
-        _us("ts").alias("ts_us"),
-        F.col("value_asof"),
-        _us("ts_asof").alias("feature_ts_us"),
-    )
-
-
-def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join with a 1-hour tolerance: matches older than 3600s are nulled."""
-    from pic2vec_spark.ops.asof import asof_join
-
-    ev = _events(spark, sf_dir)
-    features = ev.filter(F.col("event_type") != "purchase").select(
-        F.col("user_id").alias("entity_id"), "ts", "event_id", "value"
-    )
-    queries = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("entity_id"), "ts", "event_id"
-    )
-    joined = asof_join(
-        queries, features, on="entity_id", ts="ts",
-        value_cols=["value"], tiebreak="event_id", tolerance_s=3600,
-    )
-    return joined.select(
-        F.col("event_id"),
-        F.col("entity_id").alias("user_id"),
-        _us("ts").alias("ts_us"),
-        F.col("value_asof"),
-        _us("ts_asof").alias("feature_ts_us"),
-    )
-
-
 def _asof_sides(spark: SparkSession, sf_dir: str):
     ev = _events(spark, sf_dir)
     features = ev.filter(F.col("event_type") != "purchase").select(
@@ -139,6 +113,34 @@ def _asof_out(joined: DataFrame) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
+def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each 'purchase' event sees the latest prior (ts, then
+    feature-first, then event_id tiebreak) non-purchase event's value."""
+    from pic2vec_spark.ops.asof import asof_join
+
+    queries, features = _asof_sides(spark, sf_dir)
+    return _asof_out(
+        asof_join(
+            queries, features, on="entity_id", ts="ts",
+            value_cols=["value"], tiebreak="event_id",
+        )
+    )
+
+
+def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join with a 1-hour tolerance: matches older than 3600s are nulled."""
+    from pic2vec_spark.ops.asof import asof_join
+
+    queries, features = _asof_sides(spark, sf_dir)
+    return _asof_out(
+        asof_join(
+            queries, features, on="entity_id", ts="ts",
+            value_cols=["value"], tiebreak="event_id", tolerance_s=3600,
+        )
+    )
+
+
 def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of: each purchase sees the EARLIEST non-purchase event
     at-or-after it (smallest event_id among equal-ts features)."""
@@ -153,6 +155,7 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest as-of: closer of backward/forward match; exact time-distance
     tie resolves backward (the leak-free side)."""
@@ -192,6 +195,7 @@ def _multi_asof_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3")
 def q_multi_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-matrix assembly: backward as-of join of the purchase
     spine against TWO feature tables (clicks, views) in one window pass
@@ -221,6 +225,7 @@ def q_pit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audit_point_in_time(joined, "ts", ["ts_clk", "ts_vw"])
 
 
+@_tag(bench="extended_r3")
 def q_pit_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-matrix backfill grid: each clicking user's latest click
     value as of EVERY epoch-aligned day boundary spanning the click
@@ -298,6 +303,7 @@ def q_entity_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_sliding_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 1-hour range window per event: count + avg of value over
     [ts - 1h, ts] within the same user (RANGE frame: equal-ts peers
@@ -353,6 +359,7 @@ def q_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary over lineitem: pushed-down date
     filter, map-side partial aggregation, decimal-exact money sums (per
@@ -392,6 +399,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r4")
 def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: local-supplier revenue per (region, nation) —
     lineitem ⋈ orders ⋈ customer ⋈ supplier ⋈ nation ⋈ region with the
@@ -437,6 +445,7 @@ def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r4b")
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: top-10 unshipped orders by revenue for one
     market segment.  customer (segment-filtered) broadcasts into
@@ -532,6 +541,7 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 customers by order revenue per nation: broadcast dimension
     joins (customer, nation) onto the orders fact, decimal-exact revenue,
@@ -607,6 +617,7 @@ def q_ivm_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize_agg(merge_agg_states([base, delta], keys), keys)
 
 
+@_tag(bench="extended_r3")
 def q_feature_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-entity feature compaction (ops/asof.py compact_features):
     keep one row per (entity, hour bucket) — the bucket's latest row,
@@ -628,6 +639,7 @@ def q_feature_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3")
 def q_daily_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Novel-sketch class: fixed-boundary histogram quantiles through
     the rollup CASCADE — raw events → hourly histograms → daily
@@ -670,6 +682,7 @@ def q_distinct_tokens_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_distinct(terms, "source", "term", k=KMV_K)
 
 
+@_tag(bench="extended")
 def q_user_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per user (the percentile_cont
     operator class — SQL-standard linear interpolation, identical in
@@ -685,6 +698,7 @@ def q_user_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
+@_tag(bench="extended")
 def q_event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: per-user event counts as columns (explicit value list so
     the schema is static — the scale-correct form: an unlisted pivot
@@ -733,6 +747,7 @@ def q_user_cohorts_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended")
 def q_purchase_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction class: pull the numeric field out of
     the JSON props column at scan time (narrow projection) and
@@ -788,7 +803,7 @@ def q_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_rolling_5(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_rolling_5_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-5-ROWS stats per user timeline (ops/windows.
     rolling_rows_agg): the 'mean/std of the last n observations'
     feature family — ROWS frame (event-count), complementing the
@@ -807,6 +822,7 @@ def q_rolling_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.windows import lag_lead
 
@@ -824,6 +840,7 @@ def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null out value except on purchases, forward-fill per user."""
     from pic2vec_spark.ops.windows import forward_fill
@@ -843,6 +860,7 @@ def q_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resample each user's irregular event values onto a regular 6h
     grid with linear interpolation between the surrounding
@@ -863,6 +881,7 @@ def q_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_twap_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user time-weighted average value (trapezoidal integral of
     the piecewise-linear curve over the observed span) — the
@@ -879,6 +898,7 @@ def q_twap_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_pit_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sort multi-feature point-in-time training matrix: six
     trailing features — lag-1 value, last-5-rows mean, running sum,
@@ -918,6 +938,7 @@ def q_pit_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user daily open/high/low/close downsample of the value
     stream — ONE hash aggregate (max/min of struct(ts, tiebreak, v)
@@ -939,6 +960,7 @@ def q_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TREND_EPOCH_US = 1_704_067_200_000_000  # 2024-01-01, keeps x well-scaled
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user least-squares trend of value over time via the SQL
     regr_* aggregates (x = days since 2024-01-01): slope, intercept,
@@ -955,6 +977,7 @@ def q_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3")
 def q_events_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (z-order) layout key over two bucketed dimensions —
     user bucket x hour-of-epoch bucket — the write-side clustering key
@@ -983,6 +1006,7 @@ def _scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3")
 def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 history compression: collapse each user's consecutive runs
     of the same event_type into validity intervals [valid_from,
@@ -1016,6 +1040,7 @@ def q_scd2_state_mid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.windows import sessionize
 
@@ -1031,6 +1056,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session aggregates on top of sessionize (count, span, avg value)."""
     from pic2vec_spark.ops.windows import sessionize
@@ -1058,6 +1084,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.windows import tumbling_agg
 
@@ -1077,6 +1104,7 @@ def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="relational")
 def q_topk_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.windows import topk_per_entity
 
@@ -1115,6 +1143,7 @@ def _timeline_from_events(spark: SparkSession, sf_dir: str, n_images: int) -> Da
     )
 
 
+@_tag(eager=True)
 def q_pit_featurize_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: synth images → dedup → NumPy-SqueezeNet featurize →
     join to event timeline → as-of join (zero temporal leakage).
@@ -1152,6 +1181,7 @@ def q_pit_featurize_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r4")
 def q_pit_asof_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Companion oracle for the flagship: the SAME images / timeline /
     plan / point_in_time_features path as q_pit_featurize_asof, projected
@@ -1183,6 +1213,7 @@ def q_pit_asof_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_pit_curated_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation propagated through the point-in-time join with zero
     temporal leakage: the timeline's feature side is screened by the
@@ -1260,6 +1291,7 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r4b")
 def q_doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rules quality filter (Rae et al. 2021): seven per-rule
     total booleans + their conjunction, every metric a closed-form
@@ -1318,12 +1350,14 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(scale_gate=True)
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.dedup import exact_dedup
 
     return exact_dedup(_documents(spark, sf_dir), "doc_id", "text")
 
 
+@_tag(bench="extended_r4", scale_gate=True)
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.dedup import jaccard_pairs
 
@@ -1333,6 +1367,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended", scale_gate=True)
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.dedup import lsh_candidate_pairs
 
@@ -1342,6 +1377,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5", scale_gate=True)
 def q_dedup_lsh_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup-index maintenance: build the persisted LSH
     bucket index on HALF the corpus, append the other half (new
@@ -1377,6 +1413,7 @@ def q_dedup_lsh_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r5", scale_gate=True)
 def q_dedup_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time dedup gate: probe an incoming batch (odd doc_ids)
     against the persisted index of the existing corpus (even doc_ids)
@@ -1420,6 +1457,7 @@ def _reingest_batch(docs: DataFrame) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5", scale_gate=True)
 def q_dedup_digest_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental EXACT-dedup index: build the persisted digest index
     on the even half, append the odd half plus a re-keyed re-ingest
@@ -1449,6 +1487,7 @@ def q_dedup_digest_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r5", scale_gate=True)
 def q_dedup_digest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time exact-dup gate: probe the incoming batch against the
     persisted digest index of the committed corpus (even doc_ids) — one
@@ -1479,6 +1518,7 @@ def q_dedup_digest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r5", scale_gate=True)
 def q_dedup_gate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full one-call ingest gate: both persisted indexes built on
     the committed corpus (even doc_ids), then the incoming batch (odd
@@ -1516,12 +1556,14 @@ def q_dedup_gate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(lroot, ignore_errors=True)
 
 
+@_tag(bench="extended", scale_gate=True)
 def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.dedup import simhash
 
     return simhash(_documents(spark, sf_dir), "doc_id", "text")
 
 
+@_tag(scale_gate=True)
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.dedup import hamming_neardup_pairs, simhash
 
@@ -1529,6 +1571,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hamming_neardup_pairs(sim, "doc_id", max_distance=SIMHASH_MAXDIST)
 
 
+@_tag(scale_gate=True, eager=True)
 def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pair-level near-dup → actionable duplicate GROUPS: connected
     components over the simhash near-dup pairs (min-label propagation;
@@ -1542,6 +1585,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_N_SHARDS = 8
 
 
+@_tag(bench="extended_r5d", eager=True)
 def q_dedup_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware sharding (ops/dedup.cluster_coherent_shards):
     every document shards on its cluster representative, so no
@@ -1563,6 +1607,7 @@ TRIPLET_N_NEG = 4
 TRIPLET_POOL = 256
 
 
+@_tag(bench="extended_r5d", eager=True)
 def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic contrastive triplet mining
     (ops/dedup.contrastive_triplets): simhash near-dup pairs as
@@ -1582,6 +1627,7 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(scale_gate=True, eager=True)
 def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end dedup recipe: keep ONE document per near-dup
     cluster (the min doc_id) plus every unpaired document — an
@@ -1617,6 +1663,7 @@ def q_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hash_split(rep, key_col="rep", test_pct=10, salt="split")
 
 
+@_tag(bench="extended_r4", scale_gate=True)
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broder containment C(A→B) = |A∩B| / |A| over shingle sets
     (ops/dedup.containment_pairs): the asymmetric dedup criterion that
@@ -1634,6 +1681,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 DUP_SPAN_W = 8
 
 
+@_tag(bench="extended_r4", scale_gate=True)
 def q_doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact repeated-substring dedup (Lee et al. 2021 class): maximal
     token spans whose 8-token windows repeat anywhere in the corpus —
@@ -1654,6 +1702,7 @@ def q_doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r4", scale_gate=True)
 def q_doc_dup_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc duplicated-token fraction (the threshold metric for
     span-level dedup: trim/drop docs > X% corpus-duplicated) — sums the
@@ -1666,6 +1715,7 @@ def q_doc_dup_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended")
 def q_doc_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level tf-idf top-3 terms per document (term extraction →
     tf agg → vocabulary-sized idf broadcast join → WindowGroupLimit
@@ -1675,6 +1725,7 @@ def q_doc_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tf_idf_top_terms(_documents(spark, sf_dir), "doc_id", "text", k=3)
 
 
+@_tag(bench="extended")
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic md5-bucket train/test assignment (stable under
     repartitions and incremental appends; no RNG)."""
@@ -1685,6 +1736,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r4b")
 def q_kfold_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 5-fold assignment over documents (md5-bucket %
     k — no RNG, stable under repartition/append/rerun)."""
@@ -1722,6 +1774,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3c")
 def q_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative constraint suite (ops/quality.py): five expectations
     over events evaluated in ONE aggregation pass, plus a referential-
@@ -1769,6 +1822,7 @@ def _pii_text(doc_id, text):
     )
 
 
+@_tag(bench="extended_r4")
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction (ops/text.scrub_pii): plant one of each PII kind
     on a doc_id schedule, then scrub — emails/SSNs/IPv4s/phones become
@@ -1829,6 +1883,7 @@ MIXTURE_BUDGET = 500_000
 MIXTURE_SAMPLE_BUDGET = 5_000  # small enough to force real prefix cuts at sf0.01
 
 
+@_tag(bench="extended_r5d", scale_gate=True)
 def q_domain_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain temperature mixture PLAN (ops/sampling.mixture_plan):
     the LLaMA/Pile-style data-card table — per source: exact token
@@ -1848,6 +1903,7 @@ def q_domain_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5d", scale_gate=True)
 def q_mixture_sampled_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The executable end of the mixture story
     (ops/sampling.token_budget_sample composing mixture_plan): per
@@ -1911,6 +1967,7 @@ def _datacard_sql(where: str) -> str:
     """.replace("{where}", where)
 
 
+@_tag(bench="extended_r5d")
 def q_doc_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-law corpus diagnostic (ops/text.zipf_fit): least-squares
     slope/intercept of log(freq) vs log(rank) over the whole
@@ -1923,6 +1980,7 @@ def q_doc_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zipf_fit(_documents(spark, sf_dir))
 
 
+@_tag(bench="extended_r5d")
 def q_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Executable epoch schedule (ops/sampling.epoch_schedule): the
     500k-token mixture plan decomposed per source into full passes +
@@ -1943,6 +2001,7 @@ def q_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     return epoch_schedule(docs, "source", "n_tok", "doc_id", plan)
 
 
+@_tag(bench="extended_r5d", scale_gate=True)
 def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus data card (ops/datacard.corpus_datacard): the one-table
     release summary — size (docs/tokens/chars), per-lang and
@@ -1957,6 +2016,7 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5d")
 def q_datacard_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Release-over-release drift (ops/datacard.datacard_diff): the
     data cards of two synthetic releases (even vs odd doc_id) aligned
@@ -1973,6 +2033,7 @@ def q_datacard_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5d")
 def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First/last-touch conversion attribution (ops/funnel.
     touch_attribution): every purchase credits the first and the last
@@ -2100,6 +2161,7 @@ def q_asof_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMBED_DIM = 64
 
 
+@_tag(bench="extended_r5d")
 def q_embedding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector hygiene screen (ops/quality.embedding_quality) over a
     corpus with PLANTED defects (the synth embeddings are clean):
@@ -2137,6 +2199,7 @@ def q_embedding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3c")
 def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space curation screen (ops/knn.centroid_outliers):
     per-label decimal-exact centroids, cosine of every vector to its
@@ -2149,6 +2212,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return centroid_outliers(emb, "label", "vec_id", "embedding", threshold=0.2)
 
 
+@_tag(bench="extended_r3c")
 def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (ops/text.contamination_stats, the
     GPT-3 appendix-C screen): docs with doc_id % 7 == 0 play the eval
@@ -2204,6 +2268,7 @@ def _decontamination_sql(n: int = 5) -> str:
     """
 
 
+@_tag(bench="extended_r3c", eager=True)
 def q_snapshot_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction (snapshots.SnapshotTable.compact): build a
     streaming-accretion-shaped table (1 big file + 24 small appended
@@ -2249,6 +2314,7 @@ def q_snapshot_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r4")
 def q_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot retention (snapshots.SnapshotTable.expire_snapshots):
     a 3-snapshot overwrite chain (4/2/3 files) + one planted orphan
@@ -2294,6 +2360,7 @@ def q_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r3c")
 def q_doc_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signed feature hashing (ops/text.hashed_tf): sparse hashing-trick
     vectors with NO vocabulary state — idx and sign from portable md5,
@@ -2305,6 +2372,7 @@ def q_doc_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hashed_tf(docs, "text", "doc_id", n_features=1024)
 
 
+@_tag(bench="extended_r3c")
 def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-self unigram fluency score (ops/text.unigram_logprob):
     mean ln p(token) per document under the corpus's empirical unigram
@@ -2318,6 +2386,7 @@ def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 DRIFT_SPLIT_TS = "2024-01-16"  # events span 2024-01-01..30; mid-month split
 
 
+@_tag(bench="extended_r3c")
 def q_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type PSI drift of the value distribution between the
     first and second half of the events timeline (ops/drift.py): fixed
@@ -2340,6 +2409,7 @@ def q_event_type_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_categorical(ev, "event_type", cur)
 
 
+@_tag(bench="extended_r3c")
 def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch heavy hitters (ops/cms.py): build a 4x512
     deterministic md5-hashed sketch over events.user_id, then verify the
@@ -2414,6 +2484,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r4")
 def q_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM sequence packing: concatenate each source's documents in
     doc_id order and cut the token stream into 1024-token training
@@ -2428,6 +2499,7 @@ def q_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "n_tokens", "seq_id", "seq_offset")
 
 
+@_tag(eager=True)
 def q_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end corpus-construction recipe in one query — what a
     training-data pipeline actually runs: exact dedup (keep min id per
@@ -2457,6 +2529,7 @@ def q_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hash_split(kept.select("doc_id"), "doc_id", test_pct=10)
 
 
+@_tag(eager=True)
 def q_training_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-4 curation recipe end-to-end: exact dedup → near-dup
     survivors (simhash CC) → SemDeDup keep (embedding cells — catches
@@ -2512,6 +2585,7 @@ def q_training_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hash_split(base, "doc_id", test_pct=10)
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_training_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-5 recipe: every training_corpus_v2 stage (exact dedup
     → simhash-CC survivors → SemDeDup → Gopher structural rules →
@@ -2531,6 +2605,7 @@ def q_training_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(scale_gate=True)
 def q_neardup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Operator composition: near-duplicate document pairs flagged by at
     least 2 of {n-gram Jaccard, MinHash-LSH candidates, SimHash Hamming}
@@ -2550,6 +2625,7 @@ def q_neardup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(eager=True)
 def q_snapshot_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot / lineage / incremental-resume surface through the
     driver contract: write an initial feature snapshot, append an
@@ -2581,6 +2657,7 @@ def q_snapshot_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r3", eager=True)
 def q_features_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot MERGE/upsert (CDC): write customer as a range-clustered
     snapshot, merge keyed corrections (BUILDING-segment balances bumped
@@ -2627,6 +2704,7 @@ def q_features_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(eager=True)
 def q_features_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed snapshot DELETE (right-to-erasure): write customer as a
     range-clustered snapshot, tombstone-delete every MACHINERY-segment
@@ -2667,6 +2745,7 @@ def q_features_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(eager=True)
 def q_snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Changelog read between snapshots (snapshots.snapshot_diff):
     replay the features_upsert recipe (BUILDING balances +100, 20 new
@@ -2712,6 +2791,7 @@ def q_snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(eager=True)
 def q_lineage_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineage-vs-data consistency, oracle-checked: the sum of the
     manifest's per-partition lineage row counts and the actual scanned
@@ -2742,6 +2822,7 @@ def q_lineage_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(scale_gate=True)
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.knn import cosine_topk
 
@@ -2750,6 +2831,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(embs, queries, k=KNN_K)
 
 
+@_tag(bench="extended_r4")
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-pair mining (ops/knn.hard_negatives): for each of the
     first KNN_QUERIES vectors, the top-k most-similar vectors with a
@@ -2815,6 +2897,7 @@ def _pca_artifact(sf_dir: str):
     return mu, comps, evr, lam
 
 
+@_tag(bench="extended_r5d")
 def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact PCA projection (ops/knn.pca_project): 64-dim embeddings
     onto the top-8 principal components fitted on the deterministic
@@ -2854,6 +2937,7 @@ def _pca_project_sql() -> str:
 MAHA_THRESHOLD = 3.0
 
 
+@_tag(bench="extended_r5d")
 def q_embedding_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitened (Mahalanobis-in-subspace) outlier scores: each
     embedding's PCA projections divided by their component variances —
@@ -2861,22 +2945,22 @@ def q_embedding_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     covariance-aware complement of the centroid-cosine outlier screen
     (a point can be near the centroid yet far in a low-variance
     direction).  Composes pca_project + a literal eigenvalue array;
-    one vec_id groupBy.  Oracle: the same arithmetic over the
-    projection SQL with the identical λ literals."""
+    one vec_id groupBy whose 8 terms fold in fixed dim_idx order, so
+    the sum does not depend on partition order.  Oracle: the same
+    arithmetic over the projection SQL with the identical λ literals."""
     mu, comps, _, lam = _pca_artifact(ORACLE_SF_DIR)
     from pic2vec_spark.ops.knn import pca_project
 
     lam_arr = F.array(*[F.lit(float(v)) for v in lam])
     proj = pca_project(_embeddings(spark, sf_dir), mu, comps)
+    w = F.col("value") * F.col("value") / F.element_at(
+        lam_arr, F.col("dim_idx") + 1
+    )
+    terms = F.array_sort(F.collect_list(F.struct("dim_idx", w.alias("w"))))
+    total = F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t["w"])
     return (
-        proj.withColumn(
-            "__w",
-            F.col("value")
-            * F.col("value")
-            / F.element_at(lam_arr, F.col("dim_idx") + 1),
-        )
-        .groupBy("vec_id")
-        .agg(F.round(F.sqrt(F.sum("__w")), 6).alias("maha"))
+        proj.groupBy("vec_id")
+        .agg(F.round(F.sqrt(total), 6).alias("maha"))
         .select(
             "vec_id",
             "maha",
@@ -2903,6 +2987,7 @@ def _maha_sql() -> str:
     """
 
 
+@_tag(bench="extended_r4")
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via Reciprocal Rank Fusion (ops/rank.rrf_fuse):
     fuse an embedding ranking (cosine top-10) with a lexical ranking
@@ -2942,6 +3027,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fuse([vec, lex], top=10)
 
 
+@_tag(bench="extended", scale_gate=True)
 def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate ANN (random-hyperplane LSH buckets + exact re-rank).
     Full oracle (the plane literals are embedded in the SQL); recall vs
@@ -3003,6 +3089,7 @@ def _pq_codebooks(sf_dir: str):
     return pq_train(x, m=PQ_M, n_codes=PQ_CODES, iters=PQ_ITERS)
 
 
+@_tag(bench="extended_r4", scale_gate=True)
 def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k (Jegou et al. 2011): corpus rows
     are m=4 subspace codes (at scale a PRECOMPUTED stored column — the
@@ -3021,6 +3108,7 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(scale_gate=True)
 def q_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composition (ops/knn.ivf_pq_topk): the coarse quantizer
     prunes to nprobe cells, PQ codes + broadcast query LUTs score the
@@ -3038,6 +3126,7 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(scale_gate=True, eager=True)
 def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: corpus assigned to argmax-cosine centroid cell, queries
     probe their nprobe nearest cells, exact re-rank inside the probed
@@ -3052,6 +3141,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(scale_gate=True, eager=True)
 def q_knn_ivf_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over a PERSISTED cell-partitioned index (ops/ivf_store):
     the corpus is written once as a snapshot whose manifest records each
@@ -3080,6 +3170,7 @@ def q_knn_ivf_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(scale_gate=True, eager=True)
 def q_knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance: build the index on HALF the
     corpus, append the other half (new cell-partitioned files only —
@@ -3114,6 +3205,7 @@ def q_knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r3", scale_gate=True, eager=True)
 def q_caption_image_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal dedup conflicts — the two modalities of a multimodal
     row disagreeing about duplication: pairs that are near-dups by TEXT
@@ -3166,12 +3258,14 @@ def q_caption_image_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_only.unionByName(emb_only)
 
 
+@_tag(scale_gate=True)
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pic2vec_spark.ops.knn import cosine_neardup_pairs
 
     return cosine_neardup_pairs(_embeddings(spark, sf_dir), threshold=NEARDUP_COS)
 
 
+@_tag(scale_gate=True)
 def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path for embedding near-dup: hyperplane-LSH bucket
     candidates + exact re-rank via the Arrow pair kernel (never
@@ -3193,6 +3287,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_COS = 0.4
 
 
+@_tag(bench="extended_r4b", scale_gate=True, eager=True)
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means cells over the embedding
     corpus, within-cell cosine, drop rows within SEMDEDUP_COS of a
@@ -3210,6 +3305,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(eager=True)
 def q_multi_column_widened(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's multi-image-column flow (O2/O5) + CSV-compat
     widening (S8/P6) through the driver: a table with two image-ref
@@ -3340,6 +3436,7 @@ def _audio_span_rows() -> list[tuple[int, bytes]]:
     return out
 
 
+@_tag(bench="extended_r5d")
 def q_audio_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Voice-activity segmentation (ops/multimodal.
     audio_activity_spans): tone bursts and silences merge into
@@ -3406,6 +3503,7 @@ def _audio_activity_sql() -> str:
     """
 
 
+@_tag(bench="extended_r5d")
 def q_media_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal MEDIA data card — the release summary for the
     binary modalities, beside the text corpus_datacard: per modality
@@ -3558,6 +3656,7 @@ def _media_datacard_sql() -> str:
     """
 
 
+@_tag(bench="extended_r5c")
 def q_audio_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit robust audio fingerprint (Haitsma-Kalker sign-of-band-
     energy-difference) per WAV clip — one decode, narrow map.  Full
@@ -3569,6 +3668,7 @@ def q_audio_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compute_audio_fp(df).select("clip_id", "fp64", "fp_ok")
 
 
+@_tag(bench="extended_r5c")
 def q_audio_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate AUDIO pairs within 4 Hamming bits of the robust
     fingerprint — the half-volume copies planted in the corpus MUST
@@ -3668,6 +3768,7 @@ def _video_rows() -> list[tuple[str, bytes]]:
     return rows
 
 
+@_tag(bench="extended_r5c")
 def q_video_frame_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-frame perceptual hashes of every MJV1 video — ONE decode
     pass per stream (real from-scratch motion-JPEG-style container
@@ -3690,6 +3791,7 @@ def q_video_frame_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5c")
 def q_video_reposts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporally-aligned video repost detection: pairs matching >=3
     frames within 4 Hamming bits at one consistent frame offset — the
@@ -3809,6 +3911,7 @@ def _video_scene_rows() -> list[tuple[str, bytes]]:
     return rows
 
 
+@_tag(bench="extended_r5d")
 def q_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary scene segmentation (ops/multimodal.video_scenes):
     consecutive-frame pHash Hamming distance over the multi-shot synth
@@ -3881,6 +3984,7 @@ def _video_scenes_sql() -> str:
     """
 
 
+@_tag(bench="extended_r5d")
 def q_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scene keyframe extraction (ops/multimodal.scene_keyframes): the
     temporally middle frame of every detected scene in the multi-shot
@@ -3940,6 +4044,7 @@ def _video_keyframes_sql() -> str:
     """
 
 
+@_tag(bench="extended_r5d")
 def q_video_image_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-MODAL video→image repost links: which corpus still images
     appear as frames of which videos — the missing edge between the
@@ -4016,6 +4121,7 @@ def _video_image_matches_sql() -> str:
     """
 
 
+@_tag(bench="extended_r5c")
 def q_video_probe_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time VIDEO repost gate against a persisted frame-hash
     Hamming index: the base videos' per-frame pHashes are committed
@@ -4086,6 +4192,7 @@ def _video_probe_index_sql() -> str:
     """
 
 
+@_tag(bench="extended_r5c")
 def q_media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE curation recipe across all four modalities — the capstone of
     the shared Hamming-ball dedup contract.  Output: the kept asset
@@ -4290,6 +4397,7 @@ def q_image_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5c")
 def q_image_tile_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-major 2×2 tile pHashes per image, exploded to (image_id,
     tile_id, tile_phash64, tile_ok) — ONE decode pass; whole-image
@@ -4439,6 +4547,7 @@ def _image_shard_manifest_sql(budget: int = 65536) -> str:
     """
 
 
+@_tag(bench="extended_r5c")
 def q_image_crop_reposts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crop-robust repost detection: a deterministic batch of quadrant
     crops (re-encoded BMP — lossless, so the crop's whole-image pHash
@@ -4493,6 +4602,7 @@ def _crop_rows() -> list[dict]:
     return out
 
 
+@_tag(bench="extended_r5c")
 def q_crop_probe_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time CROP gate against a persisted tile-hash Hamming
     index: the corpus's 2×2 tile pHashes are committed once (pigeonhole
@@ -4676,6 +4786,7 @@ def _image_crop_reposts_sql() -> str:
     )
 
 
+@_tag(bench="extended_r5b")
 def q_fingerprint_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consensus near-duplicate image pairs: a pair is reported only
     when >=2 of the 3 structurally different fingerprints (DCT /
@@ -4721,6 +4832,7 @@ def q_fingerprint_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_temporal_image_repost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal image repost detection — the axes-A+B cross in one row:
     for every image OBSERVATION on a user's timeline, find the earlier
@@ -4789,6 +4901,7 @@ def q_temporal_image_repost(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_repost_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free repost FEATURES per observation — the training-side
     consumer of q_temporal_image_repost: for EVERY image observation on
@@ -4868,6 +4981,7 @@ def q_repost_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b", scale_gate=True)
 def q_repost_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-user viral spread, point-in-time safe: for every image
     observation, how many DISTINCT OTHER users had posted a perceptual
@@ -4963,6 +5077,7 @@ def q_repost_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b")
 def q_cluster_caption_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Caption consistency per image near-dup cluster — the "same
     picture, different words" screen at the binary-image level (the
@@ -5051,6 +5166,7 @@ def _flagship_phashes(spark: SparkSession) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5")
 def q_phash_index_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted Hamming-ball index over image pHashes: build on the
     even half of the synth corpus, append the odd half (new files only,
@@ -5084,6 +5200,7 @@ def q_phash_index_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r5")
 def q_phash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time IMAGE near-dup gate: probe the incoming odd half
     against the persisted pHash index of the even half — <=4-bit pairs
@@ -5114,6 +5231,7 @@ def q_phash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+@_tag(bench="extended_r5")
 def q_image_gate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-call IMAGE ingest gate: a binary-digest index (exact
     bytes) and a pHash Hamming-ball index built on the committed half
@@ -5215,6 +5333,7 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5d")
 def q_image_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image COLOR metrics (ops/multimodal.image_color_stats):
     channel means, mean HSV saturation, Hasler–Süsstrunk colorfulness,
@@ -5288,6 +5407,7 @@ def q_image_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b")
 def q_image_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused single-decode-pass curation profile: quality metrics AND
     the DCT perceptual hash from one decode of each image — at 10^12
@@ -5306,6 +5426,7 @@ def q_image_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b")
 def q_image_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-rule pass/fail suite for images (the pixel-side
     mirror of doc_gopher_rules): decode / resolution / aspect /
@@ -5329,6 +5450,7 @@ GOPHER_RULE_ORDER = [
 ]
 
 
+@_tag(bench="extended_r5b")
 def q_doc_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rules attrition report over the documents table: per rule
     the independent pass count AND the cumulative survivor count — the
@@ -5343,6 +5465,7 @@ def q_doc_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5b")
 def q_image_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-side rule attrition: the same one-pass funnel over the
     image_quality_rules booleans (decode → resolution → aspect →
@@ -5357,6 +5480,7 @@ def q_image_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rule_funnel(image_quality_rules(images), list(IMAGE_RULE_COLS))
 
 
+@_tag(bench="extended_r5b")
 def q_image_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-ranked canonical selection over pHash near-dup clusters:
     one decode pass (fused profile), pigeonhole Hamming pairs, min-label
@@ -5387,6 +5511,7 @@ def q_neardup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
+@_tag(bench="extended_r5b", eager=True)
 def q_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end multimodal (image+caption) corpus construction — the
     image-side mirror of training_corpus: decode-quality screen
@@ -5446,6 +5571,7 @@ def q_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUNNEL_STEPS = ["view", "click", "purchase"]
 
 
+@_tag(bench="extended_r3b")
 def q_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel view->click->purchase: chained conditional MIN
     aggregations (each step's scan filtered by event_type, stage table
@@ -5455,6 +5581,7 @@ def q_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel_stages(_events(spark, sf_dir), FUNNEL_STEPS)
 
 
+@_tag(bench="extended_r3b")
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order event-type transition matrix (lag over entity
     timeline, grouped count, per-prev probability)."""
@@ -5463,6 +5590,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return event_transitions(_events(spark, sf_dir))
 
 
+@_tag(bench="extended_r3b")
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort-retention triangle (engine-neutral week buckets:
     floor(days since 2024-01-01 / 7))."""
@@ -5471,6 +5599,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cohort_retention(_events(spark, sf_dir))
 
 
+@_tag(bench="extended_r3b")
 def q_session_incident_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval × interval overlap join: per-user sessions vs global
     error-burst incidents (≥3 errors within the session gap), via the
@@ -5509,6 +5638,7 @@ def q_session_incident_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3b")
 def q_event_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (event_type, day-of-week): all 4 grouping sets with
     grouping_id, decimal-exact value sums (completes the grouping-sets
@@ -5541,6 +5671,7 @@ def q_event_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r3b")
 def q_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-type outlier screen: exact median, median absolute
     deviation, and |v − med| > 3·MAD counts."""
@@ -5549,6 +5680,7 @@ def q_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mad_outliers(_events(spark, sf_dir), on="event_type", value="value", cutoff=3.0)
 
 
+@_tag(bench="extended_r3b")
 def q_corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 bigrams over documents (posexplode + doc-keyed
     lag + grouped count; final top-k sorts the aggregated bigram table)."""
@@ -5557,6 +5689,7 @@ def q_corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_bigrams(_documents(spark, sf_dir), k=20)
 
 
+@_tag(bench="extended_r3b")
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token -> sorted postings-list index (df ≥ 5): distinct (term,doc)
     shuffle + grouped sort_array(collect_list); postings zero-padded so
@@ -5649,6 +5782,7 @@ def q_event_cross_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_N_MERGES = 12
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_doc_word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus word-frequency table (lowercase alpha runs) — the working
     set for tokenizer training.  One shuffle; output = |distinct words|."""
@@ -5657,6 +5791,7 @@ def q_doc_word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return word_freqs(_documents(spark, sf_dir))
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training (Sennrich 2016) over the
     deterministic flagship caption corpus: each merge round is one
@@ -5674,6 +5809,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train(caps, n_merges=BPE_N_MERGES, min_freq=2)
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document out-of-vocabulary rate against the corpus top-V
     vocabulary: one corpus shuffle builds the vocab, then the re-scan
@@ -5684,6 +5820,7 @@ def q_doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_coverage(_documents(spark, sf_dir), vocab_size=10)
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_doc_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source-interleaved curriculum schedule: per-source quality
     ntile stages + round-robin rank within (stage, source).  Every
@@ -5700,6 +5837,7 @@ def q_doc_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "stage", "rr")
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_doc_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed dynamic batching with per-batch padding waste:
     sort-by-length within each source shard, fixed-size cut, report
@@ -5715,6 +5853,7 @@ def q_doc_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_bpe_token_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end tokenizer loop: TRAIN merges on the deterministic
     caption corpus (bpe_train), then ENCODE the same corpus with the
@@ -5843,6 +5982,7 @@ def _bpe_merges_sql() -> str:
     )
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_doc_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document bigram-LM perplexity under the corpus's own add-1
     smoothed bigram model (CCNet-style fluency, one order above
@@ -5864,6 +6004,7 @@ def q_doc_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_tag(bench="extended_r5c", scale_gate=True)
 def q_doc_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail quality split over bigram perplexity:
     tertile thresholds from ONE tiny exact-percentile aggregate
@@ -5944,299 +6085,45 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pit_featurize_asof(spark, "/root/testdata/sf0.001")
 
 
-# The round driver's correctness gate checks only the FIRST 50 entries
-# of queries() (dict order), so the window ROTATES each round until the
-# union of CORRECTNESS artifacts covers every registered query.  Round-5
-# window (per the round-4 verdict): lead with the 14 queries added after
-# the r04 rotation that have never appeared in any driver artifact, then
-# the fixed doc_packing (oracle HUGEINT cast), the two plans changed
-# this round (heavy_hitters_cms de-triple-scan, caption_image_conflicts
-# 16-table LSH), the rows-only→full-oracle promotions (SEVEN this
-# round: image_phash, image_stats, image_thumbnails, image_augment,
-# audio_features literal oracles + the image_phash_neardup brute-force
-# and multimodal_corpus composed oracles — the window carries the five
-# that fit), the flagship pair, and the OLDEST previously-gated queries
-# (r01/r02 family) as refresh anchors — see COVERAGE.md for the
-# per-query last-verified ledger.
-_R05_GATE_WINDOW = [
-    # 14 never-driver-gated (added post-r04-rotation)
-    "rolling_5_events", "regional_revenue", "shipping_priority",
-    "returned_items", "doc_gopher_rules", "doc_dup_frac",
-    "kfold_splits", "kfold_group_user", "snapshot_expiry",
-    "knn_pq", "knn_ivf_pq", "knn_ivf_append", "semantic_dedup",
-    "training_corpus_v2",
-    # round-5 fixes / promotions / flagship
-    "doc_packing", "heavy_hitters_cms", "caption_image_conflicts",
-    "image_phash", "image_stats", "image_augment", "audio_features",
-    "multimodal_corpus", "pit_featurize_asof",
-    # round-5 persisted-dedup-index additions (registered after the
-    # window was first frozen; swapped in for seven r02-covered anchors
-    # — doc_fingerprint, dedup_exact, doc_tfidf, train_test_split,
-    # stratified_sample, training_corpus, knn_cosine keep their r02
-    # artifacts — so the r01–r05 union still covers every registered
-    # query)
-    "dedup_lsh_append", "dedup_lsh_incremental",
-    "dedup_digest_append", "dedup_digest_probe", "dedup_gate_ingest",
-    "phash_index_pairs", "phash_index_probe", "image_gate_ingest",
-    # round-5 fused-profile / image-rules / quality-ranked-survivor
-    # additions (registered after the second freeze; swapped in for
-    # three r03-covered anchors — pit_backfill, scd2_user_state,
-    # events_zorder keep their r03 artifacts — union preserved)
-    "image_profile", "image_quality_rules", "image_neardup_survivors",
-    # rule-funnel attrition reports (swapped in for the last two
-    # r03-covered anchors — asof_join, multi_asof keep their r03
-    # artifacts — union preserved)
-    "doc_rule_funnel", "image_rule_funnel",
-    # curation-propagated as-of alignment (swapped in for the
-    # r02-covered dedup_minhash_lsh — its r02 full-oracle artifact
-    # stands — union preserved)
-    "pit_curated_asof",
-    # oldest previously-gated anchors (r01 rows-only, then r02 family)
-    # (dedup_jaccard swapped out for image_gate_ingest — it keeps its
-    # r02 artifact AND the sf0.1 scale-gate row, so the union holds)
-    "image_phash_neardup", "image_thumbnails",
-    # tokenizer-training / vocabulary / batching family (registered
-    # last; swapped in for resample_linear, twap_value, ohlc_daily,
-    # value_trend, pit_feature_matrix — each of those five holds a
-    # FULL-ORACLE MATCH row in SCALE_GATE_r05.json at sf0.1, a larger
-    # SF than this driver gate runs, so the union is preserved)
-    # late round-5 additions (mixture plan + its executable sampler /
-    # data card / color screen / scene segmentation + keyframes;
-    # swapped in for doc_word_freqs, doc_curriculum,
-    # doc_length_batches, bpe_merges, doc_vocab_coverage — each of
-    # those five holds a FULL-ORACLE MATCH row in SCALE_GATE_r05.json
-    # at sf0.1, a larger SF than this driver gate runs, plus a
-    # GATE_FULL_r05.json row at HEAD — and for pit_asof_alignment,
-    # which holds its r04 full-oracle driver artifact and is untouched
-    # this round, so the union is preserved)
-    "domain_mixture_plan", "corpus_datacard", "video_scenes",
-    "video_keyframes", "image_color_stats", "mixture_sampled_corpus",
-    # fused one-decode fingerprint triple + >=2-of-3 consensus near-dup
-    # (swapped in for the r02-covered knn_lsh / knn_ivf — r02 artifacts
-    # + sf0.1 scale-gate rows stand — union preserved)
-    "image_fingerprints", "fingerprint_consensus",
-    # per-user trailing-24h perceptual repost (swapped in for the
-    # r02-covered embedding_neardup — r02 artifact + sf0.1 scale-gate
-    # row stand — union preserved)
-    "temporal_image_repost",
-    # per-observation trailing-24h repost feature matrix (swapped in
-    # for the r02-covered embedding_neardup_lsh — r02 artifact + sf0.1
-    # scale-gate row stand — union preserved)
-    "repost_feature_matrix",
-    # PIT-safe cross-user spread count (swapped in for snapshot_lineage
-    # — rows-only by design with r01+r02 artifacts, so a window re-run
-    # cannot add information — union preserved)
-    "repost_spread",
-]
+def _registered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every module-level ``q_<name>`` function under ``<name>``, in
+    definition order: defining the function registers the query."""
+    return {
+        n[2:]: f for n, f in globals().items()
+        if n.startswith("q_") and callable(f)
+    }
+
+
+def _last_gated_round() -> dict[str, int]:
+    """Query name -> the newest round whose committed driver artifact
+    (``CORRECTNESS_r<NN>.json`` next to this file) names it."""
+    last: dict[str, int] = {}
+    for p in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
+        m = _re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if m:
+            for name in json.loads(p.read_text()):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q = _all_queries()
-    missing = [n for n in _R05_GATE_WINDOW if n not in q]
-    assert not missing, f"gate window names unregistered queries: {missing}"
-    ordered = {n: q[n] for n in _R05_GATE_WINDOW}
-    ordered.update({n: f for n, f in q.items() if n not in ordered})
-    return ordered
+    """The registry, ordered for the round driver's correctness gate,
+    which checks only the FIRST 50 entries: queries never named in a
+    committed CORRECTNESS artifact lead, then the oldest last-gated
+    round; ties keep definition order.  Each round's gate thus covers
+    the least recently verified queries."""
+    last = _last_gated_round()
+    reg = _registered()
+    return {n: reg[n] for n in sorted(reg, key=lambda n: last.get(n, 0))}
 
 
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def tagged(tag: str) -> dict[str, object]:
+    """``{name: value}`` of the registered queries carrying ``tag`` (one
+    of ``QUERY_TAGS``), in definition order."""
+    assert tag in QUERY_TAGS, f"unknown query tag: {tag}"
     return {
-        "asof_join": q_asof_join,
-        "asof_tolerance": q_asof_tolerance,
-        "asof_forward": q_asof_forward,
-        "asof_nearest": q_asof_nearest,
-        "multi_asof": q_multi_asof,
-        "pit_audit": q_pit_audit,
-        "pit_backfill": q_pit_backfill,
-        "scd2_user_state": q_scd2_user_state,
-        "scd2_state_mid": q_scd2_state_mid,
-        "events_zorder": q_events_zorder,
-        "lag_lead": q_lag_lead,
-        "rolling_5_events": q_rolling_5,
-        "sliding_1h": q_sliding_1h,
-        "user_activity": q_user_activity,
-        "purchase_attribution": q_purchase_attribution,
-        "daily_rollup": q_daily_rollup,
-        "ivm_user_totals": q_ivm_user_totals,
-        "daily_quantiles": q_daily_quantiles,
-        "feature_compaction": q_feature_compaction,
-        "distinct_tokens_kmv": q_distinct_tokens_kmv,
-        "user_value_quantiles": q_user_value_quantiles,
-        "event_type_pivot": q_event_type_pivot,
-        "inactive_customers": q_inactive_customers,
-        "user_cohorts_setops": q_user_cohorts_setops,
-        "purchase_props_json": q_purchase_props_json,
-        "pricing_rollup": q_pricing_rollup,
-        "pricing_summary": q_pricing_summary,
-        "top_customers": q_top_customers,
-        "regional_revenue": q_regional_revenue,
-        "shipping_priority": q_shipping_priority,
-        "returned_items": q_returned_items,
-        "multi_column_widened": q_multi_column_widened,
-        "forward_fill": q_forward_fill,
-        "resample_linear": q_resample_linear,
-        "twap_value": q_twap_value,
-        "ohlc_daily": q_ohlc_daily,
-        "pit_feature_matrix": q_pit_feature_matrix,
-        "value_trend": q_value_trend,
-        "backward_fill": q_backward_fill,
-        "decayed_sum": q_decayed_sum,
-        "entity_zscore": q_entity_zscore,
-        "sessionize": q_sessionize,
-        "session_stats": q_session_stats,
-        "tumbling_hourly": q_tumbling_hourly,
-        "topk_per_user": q_topk_per_user,
-        "funnel_stages": q_funnel_stages,
-        "event_transitions": q_event_transitions,
-        "cohort_retention": q_cohort_retention,
-        "session_incident_overlap": q_session_incident_overlap,
-        "event_cube": q_event_cube,
-        "value_mad_outliers": q_value_mad_outliers,
-        "corpus_bigrams": q_corpus_bigrams,
-        "inverted_index": q_inverted_index,
-        "pit_featurize_asof": q_pit_featurize_asof,
-        "pit_asof_alignment": q_pit_asof_alignment,
-        "doc_token_count": q_doc_token_count,
-        "doc_quality": q_doc_quality,
-        "doc_gopher_rules": q_doc_gopher_rules,
-        "doc_lang_id": q_doc_lang_id,
-        "doc_repetition": q_doc_repetition,
-        "doc_shared_ngrams": q_doc_shared_ngrams,
-        "doc_fingerprint": q_doc_fingerprint,
-        "dedup_exact": q_dedup_exact,
-        "dedup_jaccard": q_dedup_jaccard,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_lsh_append": q_dedup_lsh_append,
-        "dedup_lsh_incremental": q_dedup_lsh_incremental,
-        "dedup_digest_append": q_dedup_digest_append,
-        "dedup_digest_probe": q_dedup_digest_probe,
-        "dedup_gate_ingest": q_dedup_gate_ingest,
-        "doc_simhash": q_doc_simhash,
-        "simhash_neardup": q_simhash_neardup,
-        "neardup_consensus": q_neardup_consensus,
-        "neardup_clusters": q_neardup_clusters,
-        "dedup_shard_assign": q_dedup_shard_assign,
-        "contrastive_triplets": q_contrastive_triplets,
-        "dedup_survivors": q_dedup_survivors,
-        "cluster_safe_split": q_cluster_safe_split,
-        "dedup_containment": q_dedup_containment,
-        "doc_dup_spans": q_doc_dup_spans,
-        "doc_dup_frac": q_doc_dup_frac,
-        "doc_tfidf": q_doc_tfidf,
-        "train_test_split": q_train_test_split,
-        "kfold_splits": q_kfold_splits,
-        "kfold_group_user": q_kfold_group_user,
-        "walk_forward_splits": q_walk_forward_splits,
-        "data_quality": q_data_quality,
-        "value_drift_psi": q_value_drift_psi,
-        "event_type_drift": q_event_type_drift,
-        "heavy_hitters_cms": q_heavy_hitters_cms,
-        "doc_hashed_features": q_doc_hashed_features,
-        "snapshot_compaction": q_snapshot_compaction,
-        "snapshot_expiry": q_snapshot_expiry,
-        "decontamination": q_decontamination,
-        "embedding_outliers": q_embedding_outliers,
-        "embedding_quality": q_embedding_quality,
-        "asof_staleness": q_asof_staleness,
-        "key_skew_profile": q_key_skew_profile,
-        "source_quota_sample": q_source_quota_sample,
-        "pii_scrub": q_pii_scrub,
-        "calendar_features": q_calendar_features,
-        "temperature_sample": q_temperature_sample,
-        "domain_mixture_plan": q_domain_mixture_plan,
-        "corpus_datacard": q_corpus_datacard,
-        "mixture_sampled_corpus": q_mixture_sampled_corpus,
-        "epoch_schedule": q_epoch_schedule,
-        "doc_zipf": q_doc_zipf,
-        "datacard_diff": q_datacard_diff,
-        "touch_attribution": q_touch_attribution,
-        "value_imputed": q_value_imputed,
-        "rfm_features": q_rfm_features,
-        "boilerplate_strip": q_boilerplate_strip,
-        "value_winsorized": q_value_winsorized,
-        "doc_unigram_logprob": q_doc_unigram_logprob,
-        "part_name_matches": q_part_name_matches,
-        "stratified_sample": q_stratified_sample,
-        "weighted_sample": q_weighted_sample,
-        "doc_packing": q_doc_packing,
-        "training_corpus": q_training_corpus,
-        "snapshot_lineage": q_snapshot_lineage,
-        "features_upsert": q_features_upsert,
-        "features_delete": q_features_delete,
-        "snapshot_cdc_diff": q_snapshot_cdc_diff,
-        "hard_negatives": q_hard_negatives,
-        "hybrid_rrf": q_hybrid_rrf,
-        "embedding_jl_project": q_embedding_jl_project,
-        "embedding_pca": q_embedding_pca,
-        "embedding_mahalanobis": q_embedding_mahalanobis,
-        "lineage_reconcile": q_lineage_reconcile,
-        "knn_cosine": q_knn_cosine,
-        "knn_lsh": q_knn_lsh,
-        "knn_ivf": q_knn_ivf,
-        "knn_pq": q_knn_pq,
-        "knn_ivf_pq": q_knn_ivf_pq,
-        "knn_ivf_store": q_knn_ivf_store,
-        "knn_ivf_append": q_knn_ivf_append,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_neardup_lsh": q_embedding_neardup_lsh,
-        "semantic_dedup": q_semantic_dedup,
-        "training_corpus_v2": q_training_corpus_v2,
-        "training_corpus_v3": q_training_corpus_v3,
-        "caption_image_conflicts": q_caption_image_conflicts,
-        "audio_features": q_audio_features,
-        "image_phash": q_image_phash,
-        "image_phash_neardup": q_image_phash_neardup,
-        "image_fingerprints": q_image_fingerprints,
-        "fingerprint_consensus": q_fingerprint_consensus,
-        "temporal_image_repost": q_temporal_image_repost,
-        "repost_feature_matrix": q_repost_feature_matrix,
-        "repost_spread": q_repost_spread,
-        "cluster_caption_profile": q_cluster_caption_profile,
-        "phash_index_pairs": q_phash_index_pairs,
-        "phash_index_probe": q_phash_index_probe,
-        "image_gate_ingest": q_image_gate_ingest,
-        "image_thumbnails": q_image_thumbnails,
-        "image_stats": q_image_stats,
-        "image_color_stats": q_image_color_stats,
-        "image_profile": q_image_profile,
-        "image_quality_rules": q_image_quality_rules,
-        "image_neardup_survivors": q_image_neardup_survivors,
-        "doc_rule_funnel": q_doc_rule_funnel,
-        "image_rule_funnel": q_image_rule_funnel,
-        "pit_curated_asof": q_pit_curated_asof,
-        "image_augment": q_image_augment,
-        "multimodal_corpus": q_multimodal_corpus,
-        "neardup_degree_hist": q_neardup_degree_hist,
-        "event_type_target_enc": q_event_type_target_enc,
-        "event_value_loo": q_event_value_loo,
-        "value_quantile_bins": q_value_quantile_bins,
-        "event_value_scaled": q_event_value_scaled,
-        "lineitem_corr": q_lineitem_corr,
-        "event_cross_hash": q_event_cross_hash,
-        "doc_word_freqs": q_doc_word_freqs,
-        "bpe_merges": q_bpe_merges,
-        "doc_vocab_coverage": q_doc_vocab_coverage,
-        "doc_curriculum": q_doc_curriculum,
-        "doc_length_batches": q_doc_length_batches,
-        "bpe_token_freqs": q_bpe_token_freqs,
-        "doc_bigram_ppl": q_doc_bigram_ppl,
-        "doc_ppl_buckets": q_doc_ppl_buckets,
-        "image_tile_phash": q_image_tile_phash,
-        "image_crop_reposts": q_image_crop_reposts,
-        "image_aspect_batches": q_image_aspect_batches,
-        "image_shard_manifest": q_image_shard_manifest,
-        "crop_probe_index": q_crop_probe_index,
-        "audio_fingerprints": q_audio_fingerprints,
-        "audio_activity": q_audio_activity,
-        "media_datacard": q_media_datacard,
-        "audio_fp_neardup": q_audio_fp_neardup,
-        "video_frame_hashes": q_video_frame_hashes,
-        "video_reposts": q_video_reposts,
-        "video_scenes": q_video_scenes,
-        "video_keyframes": q_video_keyframes,
-        "video_image_matches": q_video_image_matches,
-        "video_probe_index": q_video_probe_index,
-        "media_corpus": q_media_corpus,
+        n: f.tags[tag] for n, f in _registered().items()
+        if tag in getattr(f, "tags", {})
     }
 
 

@@ -27,194 +27,16 @@ from pic2vec_spark.session import get_spark  # noqa: E402
 
 N_BENCH_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "4096"))
 
-# the headline metric sums flagship + THESE (the round-1 set, frozen so
-# `value` stays comparable across rounds' BENCH_r{N}.json files)
-RELATIONAL = [
-    "asof_join",
-    "asof_nearest",
-    "lag_lead",
-    "forward_fill",
-    "sessionize",
-    "session_stats",
-    "sliding_1h",
-    "tumbling_hourly",
-    "topk_per_user",
-    "pricing_summary",
-    "top_customers",
-]
-
-# round-2 breadth queries: timed and reported per-query + as a separate
-# `extended_sec` total, EXCLUDED from the headline `value`
-EXTENDED = [
-    "user_value_quantiles",
-    "event_type_pivot",
-    "purchase_props_json",
-    "doc_simhash",
-    "dedup_minhash_lsh",
-    "doc_tfidf",
-    "knn_lsh",
-    "train_test_split",
-]
-
-# round-3 additions — their own total (`extended_r3_sec`) so both the
-# headline `value` AND `extended_sec` stay composition-stable vs r1/r2
-EXTENDED_R3 = [
-    "daily_quantiles",
-    "feature_compaction",
-    "caption_image_conflicts",
-    "features_upsert",
-    "multi_asof",
-    "pit_backfill",
-    "scd2_user_state",
-    "events_zorder",
-]
-
-# round-3b product-analytics additions — own total (`extended_r3b_sec`)
-EXTENDED_R3B = [
-    "funnel_stages",
-    "event_transitions",
-    "cohort_retention",
-    "session_incident_overlap",
-    "event_cube",
-    "value_mad_outliers",
-    "corpus_bigrams",
-    "inverted_index",
-]
-
-# round-3c monitoring/curation additions — own total (`extended_r3c_sec`)
-EXTENDED_R3C = [
-    "data_quality",
-    "value_drift_psi",
-    "heavy_hitters_cms",
-    "doc_hashed_features",
-    "doc_unigram_logprob",
-    "decontamination",
-    "embedding_outliers",
-    "snapshot_compaction",
-]
-
-# round-4 additions — own total (`extended_r4_sec`): the flagship's
-# oracle-checked alignment companion, exact substring dedup, the
-# shingle-join family, and the retrieval compositions
-EXTENDED_R4 = [
-    "pit_asof_alignment",
-    "doc_dup_spans",
-    "doc_dup_frac",
-    "dedup_jaccard",
-    "dedup_containment",
-    "pii_scrub",
-    "doc_packing",
-    "hard_negatives",
-    "hybrid_rrf",
-    "knn_pq",
-    "regional_revenue",
-    "snapshot_expiry",
-]
-
-# round-4b additions — semantic dedup over embedding cells, the
-# Gopher-rules filter, k-fold assignment, and the TPC-H Q3 shape
-EXTENDED_R4B = [
-    "semantic_dedup",
-    "doc_gopher_rules",
-    "kfold_splits",
-    "shipping_priority",
-]
-
-# round-5 additions — the persisted LSH dedup index: incremental
-# append vs one-shot rebuild, and the ingest-time batch probe
-EXTENDED_R5 = [
-    "dedup_lsh_append",
-    "dedup_lsh_incremental",
-    "dedup_digest_append",
-    "dedup_digest_probe",
-    "dedup_gate_ingest",
-    "phash_index_pairs",
-    "phash_index_probe",
-    "image_gate_ingest",
-]
-
-# round-5b additions — the fused one-decode-pass image curation path:
-# profile (stats+phash in one pass), the Gopher-style image rule
-# suite, quality-ranked near-dup survivors, and the corpus recipe now
-# composing the fused profile
-EXTENDED_R5B = [
-    "image_profile",
-    "image_quality_rules",
-    "image_neardup_survivors",
-    "multimodal_corpus",
-    "doc_rule_funnel",
-    "image_rule_funnel",
-    "pit_curated_asof",
-    "resample_linear",
-    "twap_value",
-    "ohlc_daily",
-    "value_trend",
-    "pit_feature_matrix",
-    "fingerprint_consensus",
-    "temporal_image_repost",
-    "repost_feature_matrix",
-    "repost_spread",
-    "cluster_caption_profile",
-]
-
-# round-5c additions — tokenizer training / LM scoring, the
-# crop-robust repost family, and the audio fingerprint family
-EXTENDED_R5C = [
-    "doc_word_freqs",
-    "bpe_merges",
-    "bpe_token_freqs",
-    "doc_vocab_coverage",
-    "doc_curriculum",
-    "doc_length_batches",
-    "doc_bigram_ppl",
-    "doc_ppl_buckets",
-    "training_corpus_v3",
-    "image_tile_phash",
-    "image_crop_reposts",
-    "crop_probe_index",
-    "audio_fingerprints",
-    "audio_fp_neardup",
-    "video_frame_hashes",
-    "video_reposts",
-    "video_probe_index",
-    "media_corpus",
-]
-
-# round-5d additions — the mixture plan / data card release artifacts
-# and pHash scene segmentation + keyframe extraction
-EXTENDED_R5D = [
-    "domain_mixture_plan",
-    "mixture_sampled_corpus",
-    "corpus_datacard",
-    "image_color_stats",
-    "video_scenes",
-    "video_keyframes",
-    "video_image_matches",
-    "dedup_shard_assign",
-    "audio_activity",
-    "datacard_diff",
-    "embedding_quality",
-    "embedding_pca",
-    "embedding_mahalanobis",
-    "touch_attribution",
-    "media_datacard",
-    "epoch_schedule",
-    "doc_zipf",
-    "contrastive_triplets",
-]
-
-EXTENDED_GROUPS = [
-    ("extended_sec", EXTENDED),
-    ("extended_r3_sec", EXTENDED_R3),
-    ("extended_r3b_sec", EXTENDED_R3B),
-    ("extended_r3c_sec", EXTENDED_R3C),
-    ("extended_r4_sec", EXTENDED_R4),
-    ("extended_r4b_sec", EXTENDED_R4B),
-    ("extended_r5_sec", EXTENDED_R5),
-    ("extended_r5b_sec", EXTENDED_R5B),
-    ("extended_r5c_sec", EXTENDED_R5C),
-    ("extended_r5d_sec", EXTENDED_R5D),
-]
+# bench=<group> tags on the driver's q_ functions.  The headline metric
+# sums the flagship + the `relational` group (the round-1 set, frozen so
+# `value` stays comparable across rounds' BENCH_r{N}.json files); every
+# other group is timed per-query and reported as its own `<group>_sec`
+# total, EXCLUDED from `value`, so each total stays composition-stable
+_GROUPS: dict[str, list[str]] = {}
+for _name, _group in em.tagged("bench").items():
+    _GROUPS.setdefault(_group, []).append(_name)
+RELATIONAL = _GROUPS.pop("relational")
+EXTENDED_GROUPS = [(f"{g}_sec", names) for g, names in sorted(_GROUPS.items())]
 
 # probe agreement bound: before/after GFLOPS within 5x = the box stayed
 # comparable across the run; beyond it the wall-times are tenant-steal

@@ -1447,7 +1447,8 @@ def audio_activity_spans(
     Plan shape: ONE MapInPandas decode pass emitting the bounded
     per-frame verdict array, a narrow posexplode, one per-clip lag
     window + running state-change sum, one (clip, span) groupBy — the
-    exact shape of video_scenes, shuffles keyed by clip only.
+    exact shape of video_scenes, shuffles keyed by clip only.  The
+    clip key is every non-bytes column, all kept in the output.
     Undecodable rows vanish (audio_ok=False, empty array), matching
     the binary-op missing semantics."""
     from pic2vec_spark.codecs import decode_wav
@@ -1483,16 +1484,16 @@ def audio_activity_spans(
             out["audio_ok"] = oks
             yield out
 
+    key = [f.name for f in id_fields if f.name != bytes_col]
     frames = (
         df.mapInPandas(run, schema=schema)
         .filter(F.col("audio_ok"))
         .select(
-            *[f.name for f in id_fields if f.name != bytes_col],
+            *key,
             F.posexplode("frame_active").alias("frame_idx", "is_active"),
         )
     )
-    key = [f.name for f in id_fields if f.name != bytes_col][0]
-    w = Window.partitionBy(key).orderBy("frame_idx")
+    w = Window.partitionBy(*key).orderBy("frame_idx")
     changed = (
         F.lag("is_active").over(w).isNull()
         | (F.lag("is_active").over(w) != F.col("is_active"))
@@ -1503,7 +1504,7 @@ def audio_activity_spans(
         F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
         - F.lit(1),
     )
-    return spans.groupBy(key, "span_id").agg(
+    return spans.groupBy(*key, "span_id").agg(
         F.first("is_active").alias("is_active"),
         F.min("frame_idx").alias("start_frame"),
         F.max("frame_idx").alias("end_frame"),

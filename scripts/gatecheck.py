@@ -7,6 +7,7 @@ isclose floats).
 Usage:
     python scripts/gatecheck.py                 # all queries, sf0.01
     python scripts/gatecheck.py name1 name2     # subset
+    python scripts/gatecheck.py scale_gate      # queries carrying a tag
     SF_DIR=/root/testdata/sf0.001 python scripts/gatecheck.py ...
 """
 
@@ -59,7 +60,15 @@ def compare(spdf, ddf) -> tuple[bool, str]:
 
 def main() -> int:
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-    wanted = set(sys.argv[1:])
+    qs = em.queries()
+    wanted = set()
+    for arg in sys.argv[1:]:
+        if arg in em.QUERY_TAGS:
+            wanted |= set(em.tagged(arg))
+        elif arg in qs:
+            wanted.add(arg)
+        else:
+            raise SystemExit(f"not a query name or tag: {arg}")
     spark = get_spark("gatecheck", parallelism=int(os.environ.get("CPUS", "16")))
     con = duckdb.connect()
     for t in TABLES:
@@ -67,7 +76,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs = em.queries()
     oracles = em.oracle_sql()
     results = {}
     timings = {}

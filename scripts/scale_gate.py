@@ -12,8 +12,9 @@ Usage:
 
 Implementation: a thin wrapper over scripts/gatecheck.py — it sets
 SF_DIR / SPARK_GRAFT_ORACLE_SF_DIR / GATECHECK_OUT and execs the
-gatecheck sweep over the family list below in a FRESH interpreter
-(__spark_entry__ snapshots ORACLE_SF_DIR at import time).
+gatecheck sweep over the queries tagged ``scale_gate=True`` in
+``__spark_entry__.py`` in a FRESH interpreter (__spark_entry__
+snapshots ORACLE_SF_DIR at import time).
 """
 
 from __future__ import annotations
@@ -21,60 +22,6 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
-
-# every query whose scale story is a bucketed-never-quadratic claim
-FAMILY = [
-    # text dedup: shingle buckets, df-cap, window-digest spans
-    "dedup_exact", "dedup_jaccard", "dedup_containment",
-    "dedup_minhash_lsh", "dedup_lsh_append", "dedup_lsh_incremental",
-    # NOT phash_index_pairs/probe: they run over the fixed synth image
-    # corpus (N_FLAGSHIP_IMAGES), so an sf0.1 re-run would be
-    # bit-identical to the sf0.01 gate and test no scale claim
-    "dedup_digest_append", "dedup_digest_probe", "dedup_gate_ingest",
-    "dedup_survivors", "doc_simhash",
-    "simhash_neardup", "neardup_consensus", "neardup_clusters",
-    "doc_dup_spans", "doc_dup_frac",
-    # embedding ANN: brute force (bounded queries), LSH, IVF, PQ
-    "knn_cosine", "knn_lsh", "knn_ivf", "knn_pq", "knn_ivf_pq",
-    "knn_ivf_store", "knn_ivf_append",
-    "embedding_neardup", "embedding_neardup_lsh", "semantic_dedup",
-    # cross-modal composition of both families
-    "caption_image_conflicts",
-    # curation-propagated as-of: the query side scales with events
-    # (100k rows at sf0.1), pinning the screen→PIT composition beyond
-    # the sf0.01 gate
-    "pit_curated_asof",
-    # interpolation resample: obs side scales with events (100k rows),
-    # grid side with users x 120 instants (180k rows at sf0.1)
-    "resample_linear",
-    # time-weighted average over the full 100k-event fact side
-    "twap_value",
-    # OHLC downsample + regr_* trend over the full fact side
-    "ohlc_daily", "value_trend",
-    # one-sort six-feature PIT matrix over the full fact side
-    "pit_feature_matrix",
-    # day-bucket range join over the full 100k-event timeline (the
-    # fingerprint dim is the fixed synth corpus, but the pair set and
-    # the per-observation aggregate scale with events)
-    "temporal_image_repost", "repost_feature_matrix",
-    # cross-user spread: first-post markers + cumulative window over
-    # the full 100k-event timeline
-    "repost_spread",
-    # tokenizer training / LM scoring: every stage scales with the
-    # 5,000-doc corpus (word-frequency working set, merge rounds,
-    # encode projection, bigram-pair shuffle, percentile buckets)
-    "doc_word_freqs", "bpe_merges", "bpe_token_freqs",
-    "doc_vocab_coverage", "doc_curriculum", "doc_length_batches",
-    "doc_bigram_ppl", "doc_ppl_buckets",
-    # five-stage curation recipe incl. the perplexity screen — the
-    # heaviest documents-scaled composition registered
-    "training_corpus_v3",
-    # mixture planning + its executable token-budget sampler and the
-    # corpus data card: per-source token sums, the running-sum prefix
-    # fill, and the shared-scan report all scale with documents
-    "domain_mixture_plan", "mixture_sampled_corpus", "corpus_datacard",
-]
-
 
 def main() -> int:
     here = os.path.dirname(os.path.abspath(__file__))
@@ -87,7 +34,7 @@ def main() -> int:
     )
     env.setdefault("CPUS", "32")
     return subprocess.call(
-        [sys.executable, os.path.join(here, "gatecheck.py"), *FAMILY],
+        [sys.executable, os.path.join(here, "gatecheck.py"), "scale_gate"],
         env=env,
     )
 

@@ -251,6 +251,23 @@ class TestCompositionQueries:
         # sum(degree * n_docs) == 2 * |pairs|  (every pair has 2 endpoints)
         assert int((hist["degree"] * hist["n_docs"]).sum()) == 2 * pairs.count()
 
+    def test_embedding_mahalanobis_partition_invariant(self, spark, monkeypatch):
+        """The whitened score folds its 8 terms in dim_idx order, so its
+        rows are identical with the embeddings in 1 and in 7 partitions."""
+        import __spark_entry__ as em
+        from tests.conftest import SF_SMOKE
+
+        base = em._embeddings(spark, SF_SMOKE)
+
+        def rows(n):
+            monkeypatch.setattr(em, "_embeddings", lambda s, d: base.repartition(n))
+            df = em.queries()["embedding_mahalanobis"](spark, SF_SMOKE)
+            return df.toPandas().sort_values("vec_id").reset_index(drop=True)
+
+        one, seven = rows(1), rows(7)
+        assert len(one) > 7
+        assert one.equals(seven)
+
 
 def test_touch_attribution_first_last_and_none(spark):
     """A hand journey: view(1) click(2) purchase(3) error(4)

@@ -1361,7 +1361,9 @@ def test_cluster_coherent_shards_local_equals_global(spark):
 def test_audio_activity_spans_gain_invariant(spark):
     """Tone–silence–tone segments to exactly 3 alternating spans with
     the right frame ranges; a half-volume copy segments identically
-    (relative floor); junk bytes vanish."""
+    (relative floor); junk bytes vanish.  Every non-bytes column keys
+    the clip: a silent clip sharing clip 0's first column but not its
+    track keeps its own timeline, and both columns reach the output."""
     import numpy as np
 
     from pic2vec_spark.codecs import encode_wav
@@ -1372,22 +1374,24 @@ def test_audio_activity_spans_gain_invariant(spark):
     sil = np.zeros(800)  # 0.1 s
     x = np.concatenate([tone, sil, tone])
     rows = [
-        (0, bytearray(encode_wav(x, rate))),
-        (1, bytearray(encode_wav(0.5 * x, rate))),
-        (9, bytearray(b"junk")),
+        (0, "a", bytearray(encode_wav(x, rate))),
+        (1, "a", bytearray(encode_wav(0.5 * x, rate))),
+        (9, "a", bytearray(b"junk")),
+        (0, "b", bytearray(encode_wav(np.zeros(1600), rate))),
     ]
-    df = spark.createDataFrame(rows, "clip_id int, bytes binary")
+    df = spark.createDataFrame(rows, "clip_id int, track string, bytes binary")
     out = audio_activity_spans(df).collect()
     spans = {}
     for r in out:
-        spans.setdefault(r["clip_id"], []).append(
+        spans.setdefault((r["clip_id"], r["track"]), []).append(
             (r["span_id"], r["is_active"], r["start_frame"], r["end_frame"])
         )
     # 0.2s tone = 10 frames, 0.1s silence = 5 frames at 20ms
     expect = [(0, True, 0, 9), (1, False, 10, 14), (2, True, 15, 24)]
-    assert sorted(spans[0]) == expect
-    assert sorted(spans[1]) == expect  # gain invariance
-    assert 9 not in spans  # undecodable row dropped
+    assert sorted(spans[(0, "a")]) == expect
+    assert sorted(spans[(1, "a")]) == expect  # gain invariance
+    assert (9, "a") not in spans  # undecodable row dropped
+    assert spans[(0, "b")] == [(0, False, 0, 9)]
 
 
 def test_pca_fit_recovers_principal_axis(spark):

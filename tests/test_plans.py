@@ -15,35 +15,12 @@ import pytest
 import __spark_entry__ as em
 from tests.conftest import SF_SMOKE
 
-# queries whose constructor executes real jobs (snapshot writes, CC
-# iteration, IVF training, the flagship's CNN + broadcast-asof collect,
-# driver-side id/count fetches) — planning them is no longer free, and
-# their plan shape is already pinned by their operator tests
-EAGER = {
-    "snapshot_lineage",
-    "features_upsert",
-    "lineage_reconcile",
-    "caption_image_conflicts",
-    "knn_ivf_store",
-    "knn_ivf_append",
-    "semantic_dedup",       # constructor trains the coarse quantizer
-    "training_corpus_v2",   # composes survivors (eager CC) + semantic_dedup
-    "neardup_clusters",
-    "dedup_survivors",
-    "multimodal_corpus",
-    "training_corpus",
-    "pit_featurize_asof",
-    "multi_column_widened",
-    "knn_ivf",
-    # round-3c: constructors write+compact/delete temp snapshots; their
-    # returned frames are driver-built report rows (no UDF surface)
-    "snapshot_compaction",
-    "features_delete",
-    "snapshot_cdc_diff",
-    # round-5d: compose q_neardup_clusters (eager CC label propagation)
-    "dedup_shard_assign",
-    "contrastive_triplets",
-}
+# queries tagged eager=True: their constructor executes real jobs
+# (snapshot writes, CC iteration, IVF training, the flagship's CNN +
+# broadcast-asof collect, driver-side id/count fetches) — planning them
+# is no longer free, and their plan shape is already pinned by their
+# operator tests
+EAGER = set(em.tagged("eager"))
 
 
 def _plan(spark, name: str) -> str:
