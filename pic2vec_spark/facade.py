@@ -249,10 +249,7 @@ class ImageFeaturizer:
                 "featurize (grayscale decode is inspection-only)"
             )
 
-        from pic2vec_spark.featurize import (
-            _zero_features,
-            featurize_preloaded,
-        )
+        from pic2vec_spark.featurize import featurize_preloaded, zero_features_lit
         # localCheckpoint(eager): every per-column join below references
         # this subtree — without materialization the decode+CNN pass
         # would re-run once PER image column (the same hazard
@@ -262,10 +259,7 @@ class ImageFeaturizer:
             .select("image_id", "missing", "features")
             .localCheckpoint(eager=True)
         )
-        zero_vec = _zero_features(self.plan)
-        zero_lit = F.array(*[F.lit(float(v)) for v in zero_vec]).cast(
-            "array<float>"
-        )
+        zero_lit = zero_features_lit(self.plan)
         n = self.num_features
 
         full = self.df_original

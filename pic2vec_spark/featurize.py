@@ -35,7 +35,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pic2vec_spark.codecs import decode_image
@@ -43,10 +43,11 @@ from pic2vec_spark.model import model_forward, model_weights, weights_source
 from pic2vec_spark.plan import FeaturizerPlan
 from pic2vec_spark.preprocess import preprocess_pixels, resize_nearest
 
-# Images per NumPy forward pass. Small on purpose: a chunk-8 working set
-# (activations + im2col) stays cache-resident, which DOUBLES aggregate
-# throughput at 32 concurrent workers vs chunk-32 (memory-bandwidth
-# bound: 211 vs 96 img/s measured on this 16-core box).
+# Images per model_forward call.  SqueezeNet then runs them one at a
+# time through its buffer arena (model.squeezenet_features); the other
+# models run the slice as one batch, whose working set (activations +
+# im2col) grows with it: at 32 concurrent workers on a 16-core host,
+# chunk 8 gave twice the aggregate throughput of chunk 32.
 CNN_CHUNK = 8
 
 _DIGEST = "__digest"
@@ -139,6 +140,13 @@ def _zero_features(
         zeros = np.zeros((1, h, w, 3), dtype=np.float32)
         _worker_cache[key] = forward_features(zeros, plan, weights)[0]
     return _worker_cache[key]
+
+
+def zero_features_lit(plan: FeaturizerPlan) -> Column:
+    """f(0) as one ``array<float>`` literal, built with one py4j call
+    (``F.array`` over per-element literals costs a round trip per
+    element)."""
+    return F.lit(_zero_features(plan))
 
 
 def _weights_ref(sc, plan: FeaturizerPlan, broadcast_weights: bool):
@@ -574,8 +582,7 @@ def featurize_multi_column(
         .select(key, "missing", "features")
         .localCheckpoint(eager=True)
     )
-    zero_vec = _zero_features(plan)
-    zero_lit = F.array(*[F.lit(float(v)) for v in zero_vec]).cast("array<float>")
+    zero_lit = zero_features_lit(plan)
     out = df
     for c in image_cols:
         f = feats.select(

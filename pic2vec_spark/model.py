@@ -31,7 +31,9 @@ from pic2vec_spark.nn import (
     depthwise_conv2d,
     global_avg_pool,
     maxpool2d,
+    output_hw,
     relu,
+    scratch,
 )
 
 # (name, kh, kw, cin, cout) in forward order
@@ -77,22 +79,25 @@ def squeezenet_weights(seed: int = 0) -> dict[str, np.ndarray]:
     return weights
 
 
-def _fire(x: np.ndarray, fid: int, w: dict[str, np.ndarray]) -> np.ndarray:
-    sq = relu(
-        conv2d(x, w[f"fire{fid}/squeeze1x1/kernel"], w[f"fire{fid}/squeeze1x1/bias"])
-    )
-    left = relu(
-        conv2d(sq, w[f"fire{fid}/expand1x1/kernel"], w[f"fire{fid}/expand1x1/bias"])
-    )
-    right = relu(
-        conv2d(
-            sq,
-            w[f"fire{fid}/expand3x3/kernel"],
-            w[f"fire{fid}/expand3x3/bias"],
-            padding="same",
-        )
-    )
-    return np.concatenate([left, right], axis=-1)
+def _fire(
+    x: np.ndarray, fid: int, w: dict[str, np.ndarray], pool: str | None = None
+) -> np.ndarray:
+    """One fire module on one image, in arena buffers: squeeze 1x1 +
+    ReLU, then expand1x1 and expand3x3 write the two channel halves of
+    one output (the reference's concat), which takes both biases and
+    the ReLU in one pass each — after the maxpool ``pool`` names, when
+    one follows (see ``_bias_relu``)."""
+    k = f"fire{fid}"
+    sq_w, e1_w = w[f"{k}/squeeze1x1/kernel"], w[f"{k}/expand1x1/kernel"]
+    n, h, wd, _ = x.shape
+    ex = e1_w.shape[-1]
+    sq = scratch((k, "squeeze"), (n, h, wd, sq_w.shape[-1]))
+    relu(conv2d(x, sq_w, w[f"{k}/squeeze1x1/bias"], out=sq))
+    out = scratch((k,), (n, h, wd, 2 * ex))
+    conv2d(sq, e1_w, out=out[..., :ex])
+    conv2d(sq, w[f"{k}/expand3x3/kernel"], padding="same", out=out[..., ex:])
+    bias = np.concatenate([w[f"{k}/expand1x1/bias"], w[f"{k}/expand3x3/bias"]])
+    return _bias_relu(out, bias, pool)
 
 
 # ------------------------------------------------------------ vgg16/19
@@ -753,22 +758,73 @@ def squeezenet_features(
     x: np.ndarray, weights: dict[str, np.ndarray], depth: int = 1
 ) -> np.ndarray:
     """Decapitated forward pass: (N, 227, 227, 3) preprocessed float32
-    -> (N, width) post-GAP features (width per DEPTH_TO_LAST_FIRE)."""
+    -> (N, width) post-GAP features (width per DEPTH_TO_LAST_FIRE).
+
+    Images run one at a time through this thread's arena buffers, so a
+    layer's working set is one image's and no layer allocates.  Bias and
+    ReLU run after the 3x3/s2 maxpools that follow conv1, fire3 and
+    fire5 (``_bias_relu``)."""
     if depth not in DEPTH_TO_LAST_FIRE:
         raise ValueError("depth must be in 1..4")
     last_fire = DEPTH_TO_LAST_FIRE[depth]
-
     x = x.astype(np.float32, copy=False)
-    x = relu(conv2d(x, weights["conv1/kernel"], weights["conv1/bias"], stride=2))
-    x = maxpool2d(x)  # pool1
+    width = 2 * weights[f"fire{last_fire}/expand1x1/kernel"].shape[-1]
+    feats = np.empty((len(x), width), np.float32)
+    for i in range(len(x)):
+        feats[i] = global_avg_pool(_squeezenet_one(x[i : i + 1], weights, last_fire))[0]
+    return feats
+
+
+def _bias_relu(x: np.ndarray, bias: np.ndarray, pool: str | None) -> np.ndarray:
+    """Bias + ReLU in place, after a 3x3/s2 maxpool into the arena when
+    ``pool`` names one.  Both commute with the max exactly (rounding is
+    monotone, so max(x) + b is the largest of the rounded x + b), and
+    the pooled map is 4x smaller."""
+    if pool is not None:
+        n, h, w, c = x.shape
+        oh, ow = output_hw(h, w, 3, 3, 2, "valid")
+        x = maxpool2d(x, out=scratch((pool,), (n, oh, ow, c)))
+    return relu(np.add(x, bias, out=x))
+
+
+# pooled rows per conv1 band: a band's conv1 output (29 x 113 x 64
+# floats, 0.8 MB) is pooled while it is still in L2
+_POOL1_BAND = 14
+
+
+def _conv1_pool1(x: np.ndarray, weights: dict[str, np.ndarray]) -> np.ndarray:
+    """conv1 (3x3/s2) -> pool1 (3x3/s2) -> bias + ReLU for one image,
+    in bands of pool1 rows.  Pool row p reads conv1 rows 2p..2p+2, so
+    consecutive bands share one conv1 row: it is carried over, not
+    recomputed, and every conv1 row is computed once."""
+    k = weights["conv1/kernel"]
+    n, h, w, _ = x.shape
+    ch, cw = output_hw(h, w, 3, 3, 2, "valid")
+    ph, pw = output_hw(ch, cw, 3, 3, 2, "valid")
+    band = scratch(("conv1",), (n, 2 * _POOL1_BAND + 1, cw, k.shape[-1]))
+    pooled = scratch(("pool1",), (n, ph, pw, k.shape[-1]))
+    for p0 in range(0, ph, _POOL1_BAND):
+        p1 = min(p0 + _POOL1_BAND, ph)
+        rows = 2 * (p1 - p0) + 1  # conv1 rows 2*p0 .. 2*p1
+        lo = 0 if p0 == 0 else 1
+        if lo:
+            band[:, 0] = band[:, -1]
+        r0 = 2 * p0 + lo
+        conv2d(x[:, 2 * r0 : 4 * p1 + 3], k, stride=2, out=band[:, lo:rows])
+        maxpool2d(band[:, :rows], out=pooled[:, p0:p1])
+    return _bias_relu(pooled, weights["conv1/bias"], None)
+
+
+def _squeezenet_one(
+    x: np.ndarray, weights: dict[str, np.ndarray], last_fire: int
+) -> np.ndarray:
+    x = _conv1_pool1(x, weights)
     x = _fire(x, 2, weights)
-    x = _fire(x, 3, weights)
-    x = maxpool2d(x)  # pool3
+    x = _fire(x, 3, weights, pool="pool3")
     x = _fire(x, 4, weights)
-    x = _fire(x, 5, weights)
-    x = maxpool2d(x)  # pool5
+    x = _fire(x, 5, weights, pool="pool5")
     for fid in (6, 7, 8, 9):
         x = _fire(x, fid, weights)
         if fid == last_fire:
             break
-    return global_avg_pool(x)
+    return x

@@ -60,6 +60,7 @@ def asof_join_broadcast(
     tiebreak: str | None = None,
     tolerance_s: float | None = None,
     suffix: str = "_asof",
+    collected=None,
 ) -> DataFrame:
     """Backward as-of join with a BROADCAST feature side — the scale
     path when features are dimension-sized and queries are the 10^12-row
@@ -77,7 +78,9 @@ def asof_join_broadcast(
 
     Use when ``features`` fits on an executor (same judgement call as a
     broadcast hash join; e.g. last-known-state tables).  Correctness is
-    pinned against ``asof_join`` in tests/test_asof.py.
+    pinned against ``asof_join`` in tests/test_asof.py.  ``collected``:
+    the pandas rows of ``features`` when the caller has already
+    collected them (``features`` then only supplies the schema).
     """
     import numpy as np
     import pandas as pd
@@ -97,11 +100,10 @@ def asof_join_broadcast(
     # asof_join, which drops null-key feature rows): dropna=True below
     # discards null-key feature groups, and a null/NaN query key misses
     # the dict probe, yielding null matches.
-    fpdf = (
-        features.select(on, ts, *([tiebreak] if tiebreak else []), *value_cols)
-        .toPandas()
-        .sort_values(order_cols, kind="mergesort")
-    )
+    cols = [on, ts, *([tiebreak] if tiebreak else []), *value_cols]
+    if collected is None:
+        collected = features.select(*cols).toPandas()
+    fpdf = collected[cols].sort_values(order_cols, kind="mergesort")
     numeric_ts = np.issubdtype(fpdf[ts].dtype, np.number)
     # per-entity sorted arrays: order key + raw ts, plus PER VALUE COLUMN
     # the (key, value) arrays of that column's NON-NULL rows — matching

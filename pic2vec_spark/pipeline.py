@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pic2vec_spark.featurize import _zero_features, featurize_images
+from pic2vec_spark.featurize import featurize_images, zero_features_lit
 from pic2vec_spark.ops.asof import asof_join, asof_join_broadcast
 from pic2vec_spark.plan import FeaturizerPlan
 
@@ -75,8 +75,9 @@ def point_in_time_features(
     entity exchange of BOTH sides' key rows); ``"broadcast"`` =
     collect+broadcast the observation keys, zero shuffle of the query
     side (the scale path when observations are dimension-sized and
-    queries are the fact side); ``"auto"`` counts the timeline's feature
-    rows and broadcasts when they fit ``broadcast_max_rows``.
+    queries are the fact side); ``"auto"`` collects at most
+    ``broadcast_max_rows + 1`` of the timeline's feature rows and
+    broadcasts them when they fit ``broadcast_max_rows``.
     """
     if asof_strategy not in ("auto", "shuffle", "broadcast"):
         raise ValueError(
@@ -89,20 +90,26 @@ def point_in_time_features(
     queries = timeline.filter(F.col("kind") == "query").select(
         "entity_id", "ts", "row_id"
     )
-    strategy = asof_strategy
-    if strategy == "auto":
-        n_obs = observations.count()
-        strategy = "broadcast" if n_obs <= broadcast_max_rows else "shuffle"
-    join_fn = asof_join_broadcast if strategy == "broadcast" else asof_join
-    matched = join_fn(
-        queries,
-        observations,
+    join_kw = dict(
         on="entity_id",
         ts="ts",
         value_cols=["image_id"],
         tiebreak="row_id",
         tolerance_s=tolerance_s,
     )
+    strategy, collected = asof_strategy, None
+    if strategy == "auto":
+        # one bounded scan both picks the strategy and, when it fits,
+        # is the broadcast side
+        collected = observations.limit(broadcast_max_rows + 1).toPandas()
+        fits = len(collected) <= broadcast_max_rows
+        strategy = "broadcast" if fits else "shuffle"
+    if strategy == "broadcast":
+        matched = asof_join_broadcast(
+            queries, observations, collected=collected, **join_kw
+        )
+    else:
+        matched = asof_join(queries, observations, **join_kw)
 
     # one row per image_id, so a repeated id cannot fan a query out; the
     # min over the struct keeps one images row's columns together and
@@ -113,9 +120,7 @@ def point_in_time_features(
         .agg(F.min(F.struct("caption", "missing", "features")).alias("f"))
         .select(F.col("image_id").alias("image_id_asof"), "f.*")
     )
-    zero_lit = F.array(*[F.lit(float(v)) for v in _zero_features(plan)]).cast(
-        "array<float>"
-    )
+    zero_lit = zero_features_lit(plan)
     hit = F.col("image_id_asof").isNotNull()
     return matched.join(feats, "image_id_asof", "left").select(
         *queries.columns,

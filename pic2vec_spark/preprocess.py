@@ -22,12 +22,16 @@ CAFFE_MEAN_BGR = np.array([103.939, 116.779, 123.68], dtype=np.float32)
 
 
 def resize_nearest(img: np.ndarray, size: tuple[int, int]) -> np.ndarray:
-    """Nearest-neighbor resize (H, W, C) uint8/float -> (h, w, C)."""
+    """Nearest-neighbor resize (H, W, C) uint8/float -> C-order (h, w, C).
+
+    One ``take`` per axis: ``img[rows][:, cols]`` returns a W-major
+    array, and every later copy (``astype``, ``np.stack``) keeps that
+    layout until conv1 has to copy the whole batch back to C order."""
     h, w = size
     sh, sw = img.shape[:2]
     rows = np.minimum((np.arange(h) + 0.5) * (sh / h), sh - 1).astype(np.int64)
     cols = np.minimum((np.arange(w) + 0.5) * (sw / w), sw - 1).astype(np.int64)
-    return img[rows][:, cols]
+    return img.take(rows, axis=0).take(cols, axis=1)
 
 
 def to_grayscale(img: np.ndarray) -> np.ndarray:
@@ -43,7 +47,13 @@ def preprocess_pixels(x: np.ndarray, mode: str) -> np.ndarray:
     """Model preprocess over a (N, H, W, 3) float32 batch (RGB in)."""
     x = x.astype(np.float32, copy=False)
     if mode == "caffe":
-        x = x[..., ::-1] - CAFFE_MEAN_BGR
+        # RGB -> BGR minus the mean as one strided pass per channel: over
+        # a reversed 3-wide last axis one ufunc call loops 3 elements at
+        # a time (2.4x slower at 227x227)
+        out = np.empty(x.shape, np.float32)
+        for c in range(3):
+            np.subtract(x[..., 2 - c], CAFFE_MEAN_BGR[c], out=out[..., c])
+        x = out
     elif mode == "tf":
         x = x / 127.5 - 1.0
     else:

@@ -231,6 +231,44 @@ def test_value_columns_belong_to_matched_image(spark, plan, strategy):
             assert np.allclose(np.asarray(g.features_asof, np.float32), _zero_features(plan), atol=1e-5)
 
 
+@pytest.mark.parametrize("max_rows, picked", [(4, "broadcast"), (3, "shuffle")])
+def test_auto_strategy_bound(spark, plan, monkeypatch, max_rows, picked):
+    """``auto`` broadcasts exactly when the feature rows (4 here) fit
+    ``broadcast_max_rows``, handing the rows it collected to the
+    broadcast join; either way an unmatched ``image_id_asof`` gets
+    ``missing=True`` and exactly f(0) as ``array<float>``."""
+    import pic2vec_spark.pipeline as pipeline
+    from pic2vec_spark.featurize import _zero_features
+
+    calls = []
+    for name in ("asof_join", "asof_join_broadcast"):
+        real = getattr(pipeline, name)
+
+        def spy(*a, _real=real, _name=name, **kw):
+            calls.append((_name, kw.get("collected")))
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(pipeline, name, spy)
+    images, timeline, expected = _value_fixture()
+    out = point_in_time_features(
+        spark.createDataFrame(images, schema=IMAGES_SCHEMA),
+        spark.createDataFrame(timeline, schema=TIMELINE_SCHEMA),
+        plan,
+        broadcast_max_rows=max_rows,
+    )
+    assert [c[0] for c in calls] == (
+        ["asof_join_broadcast"] if picked == "broadcast" else ["asof_join"]
+    )
+    if picked == "broadcast":
+        assert len(calls[0][1]) == 4
+    assert out.schema["features_asof"].dataType.simpleString() == "array<float>"
+    got = out.toPandas().set_index("row_id")
+    assert {r: (v if isinstance(v, str) else None) for r, v in got.image_id_asof.items()} == expected
+    ghost = got.loc[8]
+    assert bool(ghost.missing_asof)
+    np.testing.assert_array_equal(np.asarray(ghost.features_asof, np.float32), _zero_features(plan))
+
+
 def _window_outputs(node) -> list[list[tuple[str, str]]]:
     """(name, type) of each output column of every Window node in a JVM
     plan tree."""
