@@ -787,38 +787,14 @@ def _bias_relu(x: np.ndarray, bias: np.ndarray, pool: str | None) -> np.ndarray:
     return relu(np.add(x, bias, out=x))
 
 
-# pooled rows per conv1 band: a band's conv1 output (29 x 113 x 64
-# floats, 0.8 MB) is pooled while it is still in L2
-_POOL1_BAND = 14
-
-
-def _conv1_pool1(x: np.ndarray, weights: dict[str, np.ndarray]) -> np.ndarray:
-    """conv1 (3x3/s2) -> pool1 (3x3/s2) -> bias + ReLU for one image,
-    in bands of pool1 rows.  Pool row p reads conv1 rows 2p..2p+2, so
-    consecutive bands share one conv1 row: it is carried over, not
-    recomputed, and every conv1 row is computed once."""
-    k = weights["conv1/kernel"]
-    n, h, w, _ = x.shape
-    ch, cw = output_hw(h, w, 3, 3, 2, "valid")
-    ph, pw = output_hw(ch, cw, 3, 3, 2, "valid")
-    band = scratch(("conv1",), (n, 2 * _POOL1_BAND + 1, cw, k.shape[-1]))
-    pooled = scratch(("pool1",), (n, ph, pw, k.shape[-1]))
-    for p0 in range(0, ph, _POOL1_BAND):
-        p1 = min(p0 + _POOL1_BAND, ph)
-        rows = 2 * (p1 - p0) + 1  # conv1 rows 2*p0 .. 2*p1
-        lo = 0 if p0 == 0 else 1
-        if lo:
-            band[:, 0] = band[:, -1]
-        r0 = 2 * p0 + lo
-        conv2d(x[:, 2 * r0 : 4 * p1 + 3], k, stride=2, out=band[:, lo:rows])
-        maxpool2d(band[:, :rows], out=pooled[:, p0:p1])
-    return _bias_relu(pooled, weights["conv1/bias"], None)
-
-
 def _squeezenet_one(
     x: np.ndarray, weights: dict[str, np.ndarray], last_fire: int
 ) -> np.ndarray:
-    x = _conv1_pool1(x, weights)
+    k = weights["conv1/kernel"]
+    n, h, w, _ = x.shape
+    oh, ow = output_hw(h, w, 3, 3, 2, "valid")
+    x = conv2d(x, k, stride=2, out=scratch(("conv1",), (n, oh, ow, k.shape[-1])))
+    x = _bias_relu(x, weights["conv1/bias"], pool="pool1")
     x = _fire(x, 2, weights)
     x = _fire(x, 3, weights, pool="pool3")
     x = _fire(x, 4, weights)

@@ -9,31 +9,34 @@ sees a pixel tensor; Spark ships (image_id, bytes) in and gets
 Layout: NHWC activations (float32), HWIO weights — the same layout the
 reference's tf_dim_ordering weights use.
 
-Scratch memory comes from a per-thread arena (``scratch``): one buffer
-per (key, shape), allocated zeroed on first use and reused by every
-later call with the same shapes, up to ``ARENA_BYTES``.  Without it
-every conv call mmaps and zero-fills fresh multi-MB buffers (large
-numpy allocations bypass the small-object allocator), and under many
-concurrent workers the kernel page-fault path becomes a shared
-bottleneck.  ``conv2d`` and
-``maxpool2d`` also take ``out=``, so a caller can keep its activations
-in the arena too: ``model.squeezenet_features`` runs one image at a
-time through arena buffers, and each fire module's two expand GEMMs
-write the two channel halves of one output.
+Scratch memory comes from per-thread buffers that outlive a call.
+The im2col matrix is one grow-only buffer (``_col_matrix``): it is dead
+after its GEMM, so every conv shares it, and it holds the largest matrix
+seen so far.  Other scratch comes from a per-thread arena
+(``scratch``): one buffer per (key, shape), allocated zeroed on first
+use and reused by every later call with the same shapes, up to
+``ARENA_BYTES``.  Without them every conv call mmaps and zero-fills
+fresh multi-MB buffers (large numpy allocations bypass the small-object
+allocator), and under many concurrent workers the kernel page-fault
+path becomes a shared bottleneck.  ``conv2d`` and ``maxpool2d`` also
+take ``out=``, so a caller can keep its activations in the arena too:
+``model.squeezenet_features`` runs one image at a time through arena
+buffers, and each fire module's two expand GEMMs write the two channel
+halves of one output.
 """
 
 from __future__ import annotations
 
+import math
 import threading
 
 import numpy as np
 
 
-# Bytes of scratch one thread keeps between calls, least recently used
-# dropped first.  SqueezeNet's whole per-image working set (~14 MB)
-# stays; the batched im2col buffers of the larger models (hundreds of
-# MB at CNN_CHUNK images) are made per call rather than held for the
-# life of the worker.
+# Bytes of keyed scratch one thread keeps between calls, least recently
+# used dropped first.  SqueezeNet's whole per-image working set stays;
+# a larger buffer (the other models' padded inputs at CNN_CHUNK images)
+# is made per call rather than held for the life of the worker.
 ARENA_BYTES = 64 << 20
 
 
@@ -41,6 +44,7 @@ class _Arena(threading.local):
     def __init__(self) -> None:
         self.bufs: dict[tuple, np.ndarray] = {}
         self.nbytes = 0
+        self.col = np.empty(0, np.float32)
 
 
 _ARENA = _Arena()
@@ -61,6 +65,15 @@ def scratch(key: tuple, shape: tuple[int, ...]) -> np.ndarray:
             arena.nbytes -= arena.bufs.pop(next(iter(arena.bufs))).nbytes
     arena.bufs[(key, shape)] = buf
     return buf
+
+
+def _col_matrix(shape: tuple[int, ...]) -> np.ndarray:
+    """An uninitialised float32 im2col buffer of ``shape``: a view of this
+    thread's one grow-only buffer, so it is valid until the next call."""
+    size = math.prod(shape)
+    if _ARENA.col.size < size:
+        _ARENA.col = np.empty(size, np.float32)
+    return _ARENA.col[:size].reshape(shape)
 
 
 def output_hw(
@@ -108,7 +121,8 @@ def conv2d(
 
     ``out``: an (N, OH, OW, Cout) float32 array to write into and return
     (it may be a channel slice of a wider array); default a new one.
-    The padded input and the im2col matrix live in the arena."""
+    The padded input lives in the arena, the im2col matrix in its
+    per-thread buffer."""
     kh, kw, cin, cout = w.shape
     assert x.shape[-1] == cin, (x.shape, w.shape)
     x = np.asarray(x, dtype=np.float32)
@@ -140,7 +154,7 @@ def conv2d(
             shape=(n, oh, ow, kh, kw * cin),
             strides=(sn, stride * sh, stride * sw, sh, sc),
         )
-        col = scratch(("col",), (n, oh, ow, kh, kw * cin))
+        col = _col_matrix((n, oh, ow, kh, kw * cin))
         np.copyto(col, windows)
         a = col.reshape(n * oh * ow, kh * kw * cin)
     np.matmul(a, w.reshape(kh * kw * cin, cout), out=_matrix(out))

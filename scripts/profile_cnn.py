@@ -7,8 +7,11 @@ found by wrapping ``model.conv2d`` and ``model.maxpool2d`` (a conv is
 named by the weights entry it is called with); ``glue`` is the rest of
 the forward pass (ReLU, concatenation, copies, pooling heads).
 
+Each figure is the median of ``REPEATS`` passes; the forward pass takes
+``CNN_CHUNK`` images per call, as ``featurize_batch`` does.
+
 Usage: python scripts/profile_cnn.py [--model squeezenet] [--depth 1]
-           [--images 32] [--chunk CNN_CHUNK] [--repeats 3] [--json]
+           [--images 32]
 """
 
 from __future__ import annotations
@@ -19,7 +22,6 @@ for _var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ[_var] = "1"
 
 import argparse  # noqa: E402
-import json  # noqa: E402
 import statistics  # noqa: E402
 import sys  # noqa: E402
 import time  # noqa: E402
@@ -36,6 +38,7 @@ from pic2vec_spark.plan import FeaturizerPlan  # noqa: E402
 from pic2vec_spark.synth import synth_images_pdf  # noqa: E402
 
 clock = time.process_time
+REPEATS = 3
 
 
 def gemm_probe(m: int = 3136, k: int = 576, n: int = 128, reps: int = 20) -> float:
@@ -64,7 +67,7 @@ def inputs(plan: FeaturizerPlan, n: int) -> np.ndarray:
     return np.stack(out)
 
 
-def profile(plan: FeaturizerPlan, x: np.ndarray, chunk: int) -> tuple[float, dict]:
+def profile(plan: FeaturizerPlan, x: np.ndarray) -> tuple[float, dict]:
     """One timed pass: (forward CPU s, {layer: [CPU s, FLOPs]})."""
     weights = model.model_weights(plan.model, plan.weight_seed, plan.depth)
     names = {id(v): k.rsplit("/", 1)[0] for k, v in weights.items() if v.ndim == 4}
@@ -89,8 +92,8 @@ def profile(plan: FeaturizerPlan, x: np.ndarray, chunk: int) -> tuple[float, dic
     model.conv2d, model.maxpool2d = conv, pool
     try:
         t = clock()
-        for i in range(0, len(x), chunk):
-            model.model_forward(plan.model, x[i : i + chunk], weights, plan.depth)
+        for i in range(0, len(x), CNN_CHUNK):
+            model.model_forward(plan.model, x[i : i + CNN_CHUNK], weights, plan.depth)
         total = clock() - t
     finally:
         model.conv2d, model.maxpool2d = real_conv, real_pool
@@ -102,16 +105,13 @@ def main() -> None:
     ap.add_argument("--model", default="squeezenet")
     ap.add_argument("--depth", type=int, default=1)
     ap.add_argument("--images", type=int, default=32)
-    ap.add_argument("--chunk", type=int, default=CNN_CHUNK)
-    ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--json", action="store_true", help="print one JSON object")
     args = ap.parse_args()
 
     plan = FeaturizerPlan.build(model=args.model, depth=args.depth)
     x = inputs(plan, args.images)
     n = len(x)
-    profile(plan, x[: min(n, args.chunk)], args.chunk)  # warm caches and arenas
-    runs = [profile(plan, x, args.chunk) for _ in range(args.repeats)]
+    profile(plan, x[:CNN_CHUNK])  # warm caches and arenas
+    runs = [profile(plan, x) for _ in range(REPEATS)]
     total_ms = statistics.median(r[0] for r in runs) / n * 1e3
     rows = []
     for name in runs[0][1]:
@@ -120,15 +120,8 @@ def main() -> None:
         rows.append((name, ms, flops / ms / 1e6 if flops and ms else 0.0))
     glue_ms = total_ms - sum(r[1] for r in rows)
     probe = gemm_probe()
-    if args.json:
-        print(json.dumps({
-            "model": plan.model, "depth": plan.depth, "images": n, "chunk": args.chunk,
-            "forward_ms": total_ms, "glue_ms": glue_ms, "gemm_probe_gflops": probe,
-            "layers": {name: {"ms": ms, "gflops": g} for name, ms, g in rows},
-        }))
-        return
-    print(f"{plan.model} depth {plan.depth}: {n} images, chunk {args.chunk}, "
-          f"median of {args.repeats}; fp32 GEMM probe {probe:.1f} GFLOP/s")
+    print(f"{plan.model} depth {plan.depth}: {n} images, chunk {CNN_CHUNK}, "
+          f"median of {REPEATS}; fp32 GEMM probe {probe:.1f} GFLOP/s")
     print(f"{'layer':<22}{'ms/img':>9}{'GFLOP/s':>9}{'% probe':>9}")
     for name, ms, g in rows:
         pct = f"{100 * g / probe:8.0f}%" if g else ""
