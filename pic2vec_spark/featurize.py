@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pic2vec_spark.codecs import decode_image
 from pic2vec_spark.model import model_forward, model_weights, weights_source
 from pic2vec_spark.plan import FeaturizerPlan
-from pic2vec_spark.preprocess import preprocess_pixels, resize_nearest
+from pic2vec_spark.preprocess import preprocess_pixels, resize_nearest, to_grayscale
 
 # Images per model_forward call.  SqueezeNet then runs them one at a
 # time through its buffer arena (model.squeezenet_features); the other
@@ -54,22 +54,46 @@ _DIGEST = "__digest"
 
 
 # ------------------------------------------------------------------ kernels
-# (shared verbatim by the single-machine oracle — pic2vec_spark.oracle)
+# (the single-machine oracle, pic2vec_spark.oracle, re-derives these per
+# row from the codec/preprocess/model primitives and shares none of them)
+
+def decode_batch(
+    datas: list[bytes | None],
+    fmts: list[str | None],
+    size: tuple[int, int],
+    preprocess_mode: str | None,
+    grayscale: bool = False,
+) -> tuple[np.ndarray, np.ndarray]:
+    """bytes -> ``(N, H, W, C)`` float32 pixels plus a missing flag per
+    row, C = 3 - 2*grayscale.  Valid rows are resized (then converted to
+    luma, or preprocessed when ``preprocess_mode`` is set); a row that
+    fails to decode keeps the RAW zero tensor (the reference returns
+    ``np.zeros(im_size)`` un-preprocessed, feature_preprocessing.py:318-323).
+    Only the codec's ``ValueError`` (null, empty, unsupported or corrupt
+    bytes) marks a row missing; any other error is a bug and propagates."""
+    x = np.zeros((len(datas), *size, 3 - 2 * grayscale), np.float32)
+    missing = np.zeros(len(datas), dtype=bool)
+    for i, (d, f) in enumerate(zip(datas, fmts)):
+        try:
+            img = decode_image(d, f)
+        except ValueError:
+            missing[i] = True
+            continue
+        img = resize_nearest(img, size)
+        if grayscale:
+            img = to_grayscale(img)
+        if preprocess_mode:
+            img = preprocess_pixels(img.astype(np.float32)[None], preprocess_mode)[0]
+        x[i] = img
+    return x, missing
+
 
 def decode_to_tensor(
     data: bytes | None, fmt: str | None, plan: FeaturizerPlan
 ) -> np.ndarray | None:
     """bytes -> preprocessed (H, W, 3) float32, or None when missing."""
-    if data is None:
-        return None
-    try:
-        img = decode_image(data, fmt or "")
-    except Exception:
-        return None
-    img = resize_nearest(img, plan.target_size)
-    return preprocess_pixels(
-        img.astype(np.float32)[None], plan.preprocess_mode
-    )[0]
+    x, missing = decode_batch([data], [fmt], plan.target_size, plan.preprocess_mode)
+    return None if missing[0] else x[0]
 
 
 def forward_features(
@@ -92,23 +116,16 @@ def featurize_batch(
     weights: dict[str, np.ndarray],
     zero_features: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode+preprocess+CNN one batch; returns (features, missing)."""
-    h, w = plan.target_size
-    tensors = []
-    valid_idx = []
-    missing = np.zeros(len(datas), dtype=bool)
-    for i, (d, f) in enumerate(zip(datas, fmts)):
-        t = decode_to_tensor(d, f, plan)
-        if t is None:
-            missing[i] = True
-        else:
-            tensors.append(t)
-            valid_idx.append(i)
-    features = np.tile(zero_features, (len(datas), 1))
-    if tensors:
-        feats = forward_features(np.stack(tensors), plan, weights)
-        features[np.array(valid_idx)] = feats
-    return features.astype(np.float32), missing
+    """Decode+preprocess+CNN one batch; returns (features, missing).
+    Only valid rows go through the CNN; missing rows get ``zero_features``
+    (f(0), computed once per worker)."""
+    x, missing = decode_batch(datas, fmts, plan.target_size, plan.preprocess_mode)
+    features = np.tile(zero_features.astype(np.float32), (len(datas), 1))
+    if missing.any():
+        x = x[~missing]
+    if len(x):
+        features[~missing] = forward_features(x, plan, weights)
+    return features, missing
 
 
 _worker_cache: dict = {}
@@ -202,9 +219,9 @@ def _ref_source(plan: FeaturizerPlan, weights_ref) -> str:
 _FEATS_SCHEMA = f"{_DIGEST} string, missing boolean, features array<float>"
 
 
-def _featurize_udf(plan: FeaturizerPlan, weights_bc, metrics=None):
-    """The core Arrow-batched decode+preprocess+CNN UDF over
-    (__digest, bytes, fmt) batches -> (__digest, missing, features).
+def _featurize_udf(plan: FeaturizerPlan, weights_bc, metrics=None, keep=(_DIGEST,)):
+    """The core Arrow-batched decode+preprocess+CNN UDF over batches with
+    ``bytes`` and ``fmt`` -> the ``keep`` columns + (missing, features).
     ``metrics`` (pic2vec_spark.metrics.FeaturizeMetrics) accumulates
     per-stage worker seconds back to the driver: ``cnn_sec`` wall and
     ``cpu_sec`` process CPU of ``featurize_batch``, so worker CPU minus
@@ -229,13 +246,7 @@ def _featurize_udf(plan: FeaturizerPlan, weights_bc, metrics=None):
                     cpu_sec=_t.process_time() - c0,
                     batches=1.0,
                 )
-            yield pd.DataFrame(
-                {
-                    _DIGEST: pdf[_DIGEST].values,
-                    "missing": missing,
-                    "features": list(feats),
-                }
-            )
+            yield pdf[list(keep)].assign(missing=missing, features=list(feats))
 
     return run
 
@@ -290,7 +301,6 @@ def featurize_images(
     sc = spark.sparkContext
     weights_bc = _weights_ref(sc, plan, broadcast_weights)
     n_parts = feature_partitions or sc.defaultParallelism * 2
-    run = _featurize_udf(plan, weights_bc, metrics)
 
     if not dedup:
         # inline path: featurize every row in place, no dedup, no join —
@@ -304,31 +314,22 @@ def featurize_images(
                 T.StructField("features", T.ArrayType(T.FloatType()), False),
             ]
         )
+        run = _featurize_udf(plan, weights_bc, metrics, keep=df.columns)
+        return df.repartition(n_parts).mapInPandas(run, schema=inline_schema)
 
-        source = _ref_source(plan, weights_bc)
+    run = _featurize_udf(plan, weights_bc, metrics)
+    feats = _distinct_contents(df).repartition(n_parts).mapInPandas(run, schema=_FEATS_SCHEMA)
+    return df.withColumn(_DIGEST, content_digest()).join(feats, _DIGEST, "left").drop(_DIGEST)
 
-        def run_inline(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            weights = _get_weights(plan, weights_bc)
-            zero_feat = _zero_features(plan, source, weights)
-            for pdf in batches:
-                feats_arr, missing = featurize_batch(
-                    list(pdf["bytes"]), list(pdf["fmt"]), plan, weights, zero_feat
-                )
-                out = pdf.copy()
-                out["missing"] = missing
-                out["features"] = list(feats_arr)
-                yield out
 
-        return df.repartition(n_parts).mapInPandas(run_inline, schema=inline_schema)
-
-    with_digest = df.withColumn(_DIGEST, content_digest())
-    distinct = (
-        with_digest.select(_DIGEST, "bytes", "fmt")
+def _distinct_contents(df: DataFrame) -> DataFrame:
+    """One (__digest, bytes, fmt) row per distinct image content of ``df``."""
+    return (
+        df.withColumn(_DIGEST, content_digest())
+        .select(_DIGEST, "bytes", "fmt")
         .groupBy(_DIGEST)
         .agg(F.first("bytes").alias("bytes"), F.first("fmt").alias("fmt"))
     )
-    feats = distinct.repartition(n_parts).mapInPandas(run, schema=_FEATS_SCHEMA)
-    return with_digest.join(feats, _DIGEST, "left").drop(_DIGEST)
 
 
 _PX_COLS = ("pixels", "px_h", "px_w", "px_c", "px_mode")
@@ -362,13 +363,8 @@ def decode_images(
     """
     from pyspark.sql import types as T
 
-    from pic2vec_spark.codecs import decode_image
-    from pic2vec_spark.preprocess import resize_nearest, to_grayscale
-
     if grayscale and preprocess_mode:
         raise ValueError("grayscale and preprocess_mode are mutually exclusive")
-    channels = 3 - 2 * grayscale
-    h, w = size
     schema = T.StructType(
         list(df.schema.fields)
         + [
@@ -382,30 +378,14 @@ def decode_images(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zero = np.zeros(h * w * channels, dtype=np.float32)
         for pdf in batches:
-            missing = np.zeros(len(pdf), dtype=bool)
-            pixels = []
-            for i, (d, f) in enumerate(zip(pdf["bytes"], pdf["fmt"])):
-                try:
-                    if d is None:
-                        raise ValueError("null bytes")
-                    img = decode_image(d, f or "")
-                except Exception:
-                    missing[i] = True
-                    pixels.append(zero)
-                    continue
-                img = resize_nearest(img, (h, w))
-                if grayscale:
-                    img = to_grayscale(img)
-                x = img.astype(np.float32)
-                if preprocess_mode:
-                    x = preprocess_pixels(x[None], preprocess_mode)[0]
-                pixels.append(x.ravel())
+            x, missing = decode_batch(
+                list(pdf["bytes"]), list(pdf["fmt"]), size, preprocess_mode, grayscale
+            )
             out = pdf.copy()
             out["missing"] = missing
-            out["pixels"] = pixels
-            out["px_h"], out["px_w"], out["px_c"] = h, w, channels
+            out["pixels"] = [p.ravel() for p in x]
+            out["px_h"], out["px_w"], out["px_c"] = *size, x.shape[3]
             out["px_mode"] = preprocess_mode or ""
             yield out
 
@@ -526,12 +506,7 @@ def incremental_featurize(
     weights_bc = _weights_ref(sc, plan, broadcast_weights)
     n_parts = feature_partitions or sc.defaultParallelism * 2
 
-    distinct = (
-        images.withColumn(_DIGEST, content_digest())
-        .select(_DIGEST, "bytes", "fmt")
-        .groupBy(_DIGEST)
-        .agg(F.first("bytes").alias("bytes"), F.first("fmt").alias("fmt"))
-    )
+    distinct = _distinct_contents(images)
     if table.current_snapshot_id() is not None:
         seen = table.scan().select(_DIGEST)
         distinct = distinct.join(seen, _DIGEST, "left_anti")

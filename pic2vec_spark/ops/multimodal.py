@@ -18,7 +18,7 @@ at the Spark level.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -30,37 +30,61 @@ from pic2vec_spark.codecs import decode_image, encode_png
 from pic2vec_spark.preprocess import resize_nearest
 
 
+# pandas dtype per Spark type of a _map_images column; others go in as a list
+_PD_DTYPES = {"bigint": "int64", "double": "float64", "boolean": "boolean"}
+
+
+def _map_images(
+    df: DataFrame,
+    fields: list[T.StructField],
+    kernel: Callable[[np.ndarray], tuple],
+    failed: tuple,
+    bytes_col: str,
+    fmt_col: str,
+) -> DataFrame:
+    """Narrow map appending ``fields`` to every row of ``df``: decode the
+    row's image and emit ``kernel(img)``, one value per field, or the
+    ``failed`` tuple when decode OR kernel raises (the featurize path's
+    missing semantics).  The kernel is inside the catch because a
+    decodable image can still be outside a kernel's domain
+    (``tile_phash64s`` raises IndexError on a 1x1 image)."""
+    schema = T.StructType(list(df.schema.fields) + list(fields))
+    dtypes = [_PD_DTYPES.get(f.dataType.simpleString()) for f in fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
+                try:
+                    rows.append(kernel(decode_image(data, fmt)))
+                except Exception:
+                    rows.append(failed)
+            out = pdf.copy()
+            cols = list(zip(*rows)) or [()] * len(fields)
+            for f, dtype, col in zip(fields, dtypes, cols):
+                out[f.name] = pd.array(col, dtype=dtype) if dtype else list(col)
+            yield out
+
+    return df.mapInPandas(run, schema=schema)
+
+
 def image_thumbnail(
     df: DataFrame, size: tuple[int, int] = (32, 32), bytes_col: str = "bytes",
     fmt_col: str = "fmt",
 ) -> DataFrame:
     """Decode -> nearest resize -> re-encode PNG; failures yield null
     thumb + ok=False (the missing semantics of the featurize path)."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    return _map_images(
+        df,
+        [
             T.StructField("thumb", T.BinaryType(), True),
             T.StructField("thumb_ok", T.BooleanType(), False),
-        ]
+        ],
+        lambda img: (encode_png(resize_nearest(img, size)), True),
+        (None, False),
+        bytes_col,
+        fmt_col,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs, oks = [], []
-            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
-                try:
-                    img = decode_image(data, fmt)
-                    thumbs.append(encode_png(resize_nearest(img, size)))
-                    oks.append(True)
-                except Exception:
-                    thumbs.append(None)
-                    oks.append(False)
-            out = pdf.copy()
-            out["thumb"] = thumbs
-            out["thumb_ok"] = oks
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def _dct_matrix(n: int) -> np.ndarray:
@@ -106,31 +130,17 @@ def compute_phash(
     counterpart of the input table's ``phash`` column.  Narrow map, no
     shuffle; near-dup image pairs come from
     ``ops.dedup.hamming_neardup_pairs(..., sig_col=out_col, bits=64)``."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    return _map_images(
+        df,
+        [
             T.StructField(out_col, T.LongType(), False),
             T.StructField(f"{out_col}_ok", T.BooleanType(), False),
-        ]
+        ],
+        lambda img: (phash64(img, hash_size, highfreq_factor), True),
+        (0, False),
+        bytes_col,
+        fmt_col,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes, oks = [], []
-            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
-                try:
-                    img = decode_image(data, fmt)
-                    hashes.append(phash64(img, hash_size, highfreq_factor))
-                    oks.append(True)
-                except Exception:
-                    hashes.append(0)
-                    oks.append(False)
-            out = pdf.copy()
-            out[out_col] = pd.array(hashes, dtype="int64")
-            out[f"{out_col}_ok"] = oks
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def _pack_bits64(bits: np.ndarray) -> int:
@@ -185,39 +195,24 @@ def compute_fingerprints(
     boolean``; values are identical to running compute_phash / the
     single-hash kernels separately (pinned by tests and the driver's
     literal oracle).  Narrow map, no shuffle, no per-row Python."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    return _map_images(
+        df,
+        [
             T.StructField("phash64", T.LongType(), False),
             T.StructField("dhash64", T.LongType(), False),
             T.StructField("ahash64", T.LongType(), False),
             T.StructField("fp_ok", T.BooleanType(), False),
-        ]
+        ],
+        lambda img: (
+            phash64(img, hash_size, highfreq_factor),
+            dhash64(img, hash_size),
+            ahash64(img, hash_size),
+            True,
+        ),
+        (0, 0, 0, False),
+        bytes_col,
+        fmt_col,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ph, dh, ah, oks = [], [], [], []
-            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
-                try:
-                    img = decode_image(data, fmt)
-                    ph.append(phash64(img, hash_size, highfreq_factor))
-                    dh.append(dhash64(img, hash_size))
-                    ah.append(ahash64(img, hash_size))
-                    oks.append(True)
-                except Exception:
-                    ph.append(0)
-                    dh.append(0)
-                    ah.append(0)
-                    oks.append(False)
-            out = pdf.copy()
-            out["phash64"] = pd.array(ph, dtype="int64")
-            out["dhash64"] = pd.array(dh, dtype="int64")
-            out["ahash64"] = pd.array(ah, dtype="int64")
-            out["fp_ok"] = oks
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def tile_phash64s(
@@ -259,35 +254,17 @@ def compute_tile_phash(
     different global layout), tile hashes survive any crop that
     preserves a full tile.  Narrow map, no shuffle, no per-row
     Python."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(
-                "tile_phashes", T.ArrayType(T.LongType(), False), False
-            ),
+    return _map_images(
+        df,
+        [
+            T.StructField("tile_phashes", T.ArrayType(T.LongType(), False), False),
             T.StructField("tile_ok", T.BooleanType(), False),
-        ]
+        ],
+        lambda img: (tile_phash64s(img, grid, hash_size, highfreq_factor), True),
+        ([0] * (grid * grid), False),
+        bytes_col,
+        fmt_col,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hs, oks = [], []
-            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
-                try:
-                    img = decode_image(data, fmt)
-                    hs.append(
-                        tile_phash64s(img, grid, hash_size, highfreq_factor)
-                    )
-                    oks.append(True)
-                except Exception:
-                    hs.append([0] * (grid * grid))
-                    oks.append(False)
-            out = pdf.copy()
-            out["tile_phashes"] = hs
-            out["tile_ok"] = oks
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def crop_source_matches(
@@ -367,6 +344,15 @@ def image_quality_stats(img: np.ndarray) -> dict:
 
 
 _STAT_COLS = ("brightness", "contrast", "dyn_range", "entropy", "sharpness")
+_STAT_FIELDS = [T.StructField(c, T.DoubleType(), True) for c in _STAT_COLS] + [
+    T.StructField("stats_ok", T.BooleanType(), False)
+]
+_STATS_FAILED = (None,) * len(_STAT_COLS) + (False,)
+
+
+def _rounded_stats(img: np.ndarray) -> tuple:
+    s = image_quality_stats(img)
+    return tuple(round(s[c], 6) for c in _STAT_COLS)
 
 
 def image_color_metrics(img: np.ndarray) -> dict:
@@ -409,41 +395,24 @@ def image_color_stats(
     (mean saturation under GRAYSCALE_SAT_FLOOR) in one vectorized
     decode pass — narrow map, no shuffle, same missing semantics as
     image_stats (decode failures → NULL metrics, color_ok=False)."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(c, T.DoubleType(), True) for c in _COLOR_COLS]
+
+    def kernel(img: np.ndarray) -> tuple:
+        s = image_color_metrics(img)
+        vals = tuple(round(s[c], 6) for c in _COLOR_COLS)
+        return (*vals, bool(round(s["mean_sat"], 6) < GRAYSCALE_SAT_FLOOR), True)
+
+    return _map_images(
+        df,
+        [T.StructField(c, T.DoubleType(), True) for c in _COLOR_COLS]
         + [
             T.StructField("is_grayscale", T.BooleanType(), True),
             T.StructField("color_ok", T.BooleanType(), False),
-        ]
+        ],
+        kernel,
+        (None,) * (len(_COLOR_COLS) + 1) + (False,),
+        bytes_col,
+        fmt_col,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {c: [] for c in _COLOR_COLS}
-            grays, oks = [], []
-            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
-                try:
-                    s = image_color_metrics(decode_image(data, fmt))
-                    for c in _COLOR_COLS:
-                        cols[c].append(round(s[c], 6))
-                    grays.append(
-                        bool(round(s["mean_sat"], 6) < GRAYSCALE_SAT_FLOOR)
-                    )
-                    oks.append(True)
-                except Exception:
-                    for c in _COLOR_COLS:
-                        cols[c].append(None)
-                    grays.append(None)
-                    oks.append(False)
-            out = pdf.copy()
-            for c in _COLOR_COLS:
-                out[c] = pd.array(cols[c], dtype="float64")
-            out["is_grayscale"] = pd.array(grays, dtype="boolean")
-            out["color_ok"] = oks
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def image_stats(
@@ -454,33 +423,14 @@ def image_stats(
     screen that drops black frames, blanks, and blurred scans before
     paying CNN cost).  Decode failures yield NULL metrics + ok=False
     (featurize-path missing semantics)."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(c, T.DoubleType(), True) for c in _STAT_COLS]
-        + [T.StructField("stats_ok", T.BooleanType(), False)]
+    return _map_images(
+        df,
+        _STAT_FIELDS,
+        lambda img: (*_rounded_stats(img), True),
+        _STATS_FAILED,
+        bytes_col,
+        fmt_col,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {c: [] for c in _STAT_COLS}
-            oks = []
-            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
-                try:
-                    s = image_quality_stats(decode_image(data, fmt))
-                    for c in _STAT_COLS:
-                        cols[c].append(round(s[c], 6))
-                    oks.append(True)
-                except Exception:
-                    for c in _STAT_COLS:
-                        cols[c].append(None)
-                    oks.append(False)
-            out = pdf.copy()
-            for c in _STAT_COLS:
-                out[c] = pd.array(cols[c], dtype="float64")
-            out["stats_ok"] = oks
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def image_profile(
@@ -502,45 +452,20 @@ def image_profile(
     are identical to ``image_stats`` ⨝ ``compute_phash`` (pinned by
     tests and the driver's composed literal oracle); narrow map, no
     shuffle, no per-row Python."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(c, T.DoubleType(), True) for c in _STAT_COLS]
+    return _map_images(
+        df,
+        _STAT_FIELDS
         + [
-            T.StructField("stats_ok", T.BooleanType(), False),
             T.StructField("phash64", T.LongType(), False),
             T.StructField("phash64_ok", T.BooleanType(), False),
-        ]
+        ],
+        lambda img: (
+            *_rounded_stats(img), True, phash64(img, hash_size, highfreq_factor), True
+        ),
+        _STATS_FAILED + (0, False),
+        bytes_col,
+        fmt_col,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {c: [] for c in _STAT_COLS}
-            oks, hashes, hoks = [], [], []
-            for data, fmt in zip(pdf[bytes_col], pdf[fmt_col]):
-                try:
-                    img = decode_image(data, fmt)
-                except Exception:
-                    for c in _STAT_COLS:
-                        cols[c].append(None)
-                    oks.append(False)
-                    hashes.append(0)
-                    hoks.append(False)
-                    continue
-                s = image_quality_stats(img)
-                for c in _STAT_COLS:
-                    cols[c].append(round(s[c], 6))
-                oks.append(True)
-                hashes.append(phash64(img, hash_size, highfreq_factor))
-                hoks.append(True)
-            out = pdf.copy()
-            for c in _STAT_COLS:
-                out[c] = pd.array(cols[c], dtype="float64")
-            out["stats_ok"] = oks
-            out["phash64"] = pd.array(hashes, dtype="int64")
-            out["phash64_ok"] = hoks
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 IMAGE_RULE_COLS = (

@@ -87,7 +87,7 @@ def main() -> int:
         try:
             spdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
-            print(f"{name:32s} ERROR spark: {e}")
+            print(f"{name:32s} ERROR spark: {e}", flush=True)
             results[name] = "spark_error"
             fails += 1
             continue
@@ -95,14 +95,14 @@ def main() -> int:
         if sql is None:
             dt = time.time() - t0
             timings[name] = round(dt, 2)
-            print(f"{name:32s} {len(spdf):>7d} rows-only        {dt:5.1f}s")
+            print(f"{name:32s} {len(spdf):>7d} rows-only        {dt:5.1f}s", flush=True)
             results[name] = f"rows_only:{len(spdf)}"
             continue
         try:
             ddf = con.execute(sql).fetchdf()
         except Exception as e:  # noqa: BLE001
             timings[name] = round(time.time() - t0, 2)
-            print(f"{name:32s} ERROR oracle: {e}")
+            print(f"{name:32s} ERROR oracle: {e}", flush=True)
             results[name] = "oracle_error"
             fails += 1
             continue
@@ -110,10 +110,10 @@ def main() -> int:
         dt = time.time() - t0
         timings[name] = round(dt, 2)
         status = "MATCH" if ok else f"MISMATCH {why}"
-        print(f"{name:32s} {len(spdf):>7d} {status:16s} {dt:5.1f}s")
+        print(f"{name:32s} {len(spdf):>7d} {status:16s} {dt:5.1f}s", flush=True)
         results[name] = "match" if ok else f"mismatch:{why}"
         fails += 0 if ok else 1
-    print(json.dumps({"fails": fails, "n": len(results)}))
+    print(json.dumps({"fails": fails, "n": len(results)}), flush=True)
     out = os.environ.get("GATECHECK_OUT")
     if out:
         with open(out, "w") as f:

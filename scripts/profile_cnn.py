@@ -33,7 +33,7 @@ import numpy as np  # noqa: E402
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import pic2vec_spark.model as model  # noqa: E402
-from pic2vec_spark.featurize import CNN_CHUNK, decode_to_tensor  # noqa: E402
+from pic2vec_spark.featurize import CNN_CHUNK, decode_batch  # noqa: E402
 from pic2vec_spark.plan import FeaturizerPlan  # noqa: E402
 from pic2vec_spark.synth import synth_images_pdf  # noqa: E402
 
@@ -55,16 +55,12 @@ def gemm_probe(m: int = 3136, k: int = 576, n: int = 128, reps: int = 20) -> flo
 
 
 def inputs(plan: FeaturizerPlan, n: int) -> np.ndarray:
-    """``n`` decodable synthetic images, preprocessed for ``plan``."""
+    """The first ``n`` decodable synthetic images, preprocessed for ``plan``."""
     pdf = synth_images_pdf(4 * n + 16, seed=3)
-    out = []
-    for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-        t = decode_to_tensor(data, fmt, plan)
-        if t is not None:
-            out.append(t)
-        if len(out) == n:
-            break
-    return np.stack(out)
+    x, missing = decode_batch(
+        list(pdf["bytes"]), list(pdf["fmt"]), plan.target_size, plan.preprocess_mode
+    )
+    return x[~missing][:n]
 
 
 def profile(plan: FeaturizerPlan, x: np.ndarray) -> tuple[float, dict]:
